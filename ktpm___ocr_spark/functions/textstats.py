@@ -470,30 +470,22 @@ def repetition_metrics(
 
 
 def gopher_gate(
-    df, id_col: str = "doc_id", text_col: str = "text", impl: str = "arrow"
+    df, id_col: str = "doc_id", text_col: str = "text"
 ) -> "DataFrame":
     """Composite keep/drop pre-filter in the Gopher style: length, token
     shape, stopword density, and repetition caps. Returns
     (id, keep boolean) for every input row.
 
-    ``impl="arrow"`` (default) evaluates the predicate in the columnar
-    mapInArrow kernel (operators/text_kernels.py) — decisions
-    bit-identical to the expression form (same tokenizer, same HALF_UP
-    round-boundary semantics; pinned by tests/test_text_kernels.py) at
-    ~an order of magnitude less per-row cost: the r6 composed probe
-    measured the zero-Exchange expression gate at 10.2k docs/s while
-    the extraction kernel did 74k docs/s of comparable work on the same
-    rows. ``impl="expr"`` keeps the pure-Catalyst spec the kernel is
-    tested against."""
-    if impl == "arrow":
-        from ktpm___ocr_spark.operators.text_kernels import gopher_gate_arrow
+    Evaluated in the columnar mapInArrow kernel
+    (operators/text_kernels.py) — decisions bit-identical to
+    :func:`gopher_keep_expr` (same tokenizer, same HALF_UP round-boundary
+    semantics; pinned by tests/test_text_kernels.py) at ~an order of
+    magnitude less per-row cost: the r6 composed probe measured the
+    zero-Exchange expression gate at 10.2k docs/s while the extraction
+    kernel did 74k docs/s of comparable work on the same rows."""
+    from ktpm___ocr_spark.operators.text_kernels import gopher_gate_arrow
 
-        return gopher_gate_arrow(df, id_col, text_col)
-    if impl != "expr":
-        raise ValueError(f"unknown gopher_gate impl {impl!r}")
-    return df.select(
-        F.col(id_col), gopher_keep_expr(text_col).alias("keep")
-    )
+    return gopher_gate_arrow(df, id_col, text_col)
 
 
 def gopher_keep_expr(text_col: Column | str = "text") -> Column:

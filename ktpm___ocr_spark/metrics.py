@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 METRICS_COLS = "run_id string, stage string, rows long, bytes long, wall_ms long"
 
-# URI schemes a local-filesystem manifest cannot manage: both manifest
+# URI schemes a local-filesystem manifest cannot manage: the manifest
 # classes below read/write their JSON with os-level open/replace, so a
 # Spark-writable-but-not-os-visible out_dir (hdfs://, s3a://, ...) would
 # silently break resume — the stage data lands remotely while the
@@ -61,6 +61,7 @@ def _require_local(out_dir: str, cls_name: str) -> None:
 def _sidecar_flock(lock_path: str):
     """Advisory same-host flock on a sidecar file; no-op on non-POSIX
     platforms (degrades to the documented single-writer assumption)."""
+    os.makedirs(os.path.dirname(lock_path), exist_ok=True)
     if fcntl is None:  # pragma: no cover — non-POSIX platform
         yield
         return
@@ -70,6 +71,17 @@ def _sidecar_flock(lock_path: str):
             yield
         finally:
             fcntl.flock(lf, fcntl.LOCK_UN)
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Write ``obj`` as JSON to ``path`` via a tmp file and ``os.replace``
+    (an atomic swap on POSIX: readers see the old or the new manifest,
+    never a torn one)."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
 
 
 def observe_stage(df: DataFrame, obs: Observation, size_col: str | None = None) -> DataFrame:
@@ -135,24 +147,12 @@ class CheckpointedRun:
     def manifest_path(self) -> str:
         return os.path.join(self.out_dir, "_manifest.json")
 
-    @contextlib.contextmanager
     def _manifest_lock(self):
         """Serialize manifest read-modify-write cycles (cancel() racing a
         concurrent run()'s _commit from another thread/process would
         otherwise lose one side's update between the read and the
-        os.replace). flock on a sidecar lockfile — advisory, same-host;
-        on non-POSIX platforms this degrades to the documented
-        single-writer assumption (one mutator at a time)."""
-        if fcntl is None:  # pragma: no cover — non-POSIX platform
-            yield
-            return
-        os.makedirs(self.out_dir, exist_ok=True)
-        with open(self.manifest_path + ".lock", "a") as lf:
-            fcntl.flock(lf, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(lf, fcntl.LOCK_UN)
+        os.replace)."""
+        return _sidecar_flock(self.manifest_path + ".lock")
 
     def _read_manifest(self) -> dict:
         if not os.path.exists(self.manifest_path):
@@ -161,13 +161,6 @@ class CheckpointedRun:
             m = json.load(f)
         m.setdefault("status", "running")
         return m
-
-    def _write_manifest(self, manifest: dict) -> None:
-        tmp = self.manifest_path + ".tmp"
-        os.makedirs(self.out_dir, exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self.manifest_path)  # atomic manifest swap
 
     def committed(self) -> set[int]:
         return {e["bucket"] for e in self._read_manifest()["entries"]}
@@ -191,7 +184,7 @@ class CheckpointedRun:
             m["cancelled_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
             if reason:
                 m["cancel_reason"] = reason
-            self._write_manifest(m)
+            _write_json_atomic(self.manifest_path, m)
 
     def _commit(self, bucket: int, rows: int, n_bytes: int = 0) -> None:
         with self._manifest_lock():
@@ -213,7 +206,7 @@ class CheckpointedRun:
                 m["status"] = (
                     "complete" if len(m["entries"]) >= self.n_buckets else "running"
                 )
-            self._write_manifest(m)
+            _write_json_atomic(self.manifest_path, m)
 
     def bucket_col(self):
         return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets))
@@ -254,7 +247,7 @@ class CheckpointedRun:
             m = self._read_manifest()
             if m["status"] == "cancelled":  # retry after cancel (server.js:354-366)
                 m["status"] = "running"
-                self._write_manifest(m)
+                _write_json_atomic(self.manifest_path, m)
         todo = [b for b in range(self.n_buckets) if b not in self.committed()]
         if not todo:
             # all buckets committed: restore 'complete' — a cancel that
@@ -264,7 +257,7 @@ class CheckpointedRun:
                 m = self._read_manifest()
                 if m["status"] != "complete":
                     m["status"] = "complete"
-                    self._write_manifest(m)
+                    _write_json_atomic(self.manifest_path, m)
             return done
         src = (
             source.withColumn("_bucket", self.bucket_col())
@@ -370,6 +363,9 @@ class IncrementalRun:
     spark: SparkSession
     out_dir: str
 
+    def __post_init__(self) -> None:
+        _require_local(self.out_dir, type(self).__name__)
+
     @property
     def manifest_path(self) -> str:
         return os.path.join(self.out_dir, "_files_manifest.json")
@@ -412,27 +408,30 @@ class IncrementalRun:
         )
         if fail_before_commit:  # crash injection for the recovery test
             raise RuntimeError("injected failure before manifest commit")
-        entries = []
-        if os.path.exists(self.manifest_path):
-            with open(self.manifest_path) as f:
-                entries = json.load(f)["files"]
-        for p in files:
-            entries.append(
-                {
-                    "path": p,
-                    "bytes": os.path.getsize(p),
-                    "delta_id": delta_id,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                }
-            )
-        tmp = self.manifest_path + ".tmp"
-        os.makedirs(self.out_dir, exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump({"files": entries}, f, indent=1)
-        os.replace(tmp, self.manifest_path)
+        self._commit(files, delta_id)
         return files
+
+    def _commit(self, files: list[str], delta_id: str) -> None:
+        # locked read-modify-write, as in the other manifest classes: two
+        # runs committing different deltas must not lose one another's
+        # entries between the read and the os.replace
+        with _sidecar_flock(self.manifest_path + ".lock"):
+            entries = []
+            if os.path.exists(self.manifest_path):
+                with open(self.manifest_path) as f:
+                    entries = json.load(f)["files"]
+            for p in files:
+                entries.append(
+                    {
+                        "path": p,
+                        "bytes": os.path.getsize(p),
+                        "delta_id": delta_id,
+                        "committed_at": time.strftime(
+                            "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
+                        ),
+                    }
+                )
+            _write_json_atomic(self.manifest_path, {"files": entries})
 
     def result(self) -> DataFrame:
         with open(self.manifest_path) as f:
@@ -494,13 +493,6 @@ class StagedRun:
         with open(self.manifest_path) as f:
             return json.load(f)
 
-    def _write(self, m: dict) -> None:
-        os.makedirs(self.out_dir, exist_ok=True)
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self.manifest_path)
-
     def path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
 
@@ -537,7 +529,6 @@ class StagedRun:
         # (crash-recovery race) must not lose each other's commit between
         # the read and the os.replace — same hygiene as CheckpointedRun's
         # _manifest_lock (r7 advice).
-        os.makedirs(self.out_dir, exist_ok=True)
         with _sidecar_flock(self.manifest_path + ".lock"):
             m = self._read()
             m["stages"] = [e for e in m["stages"] if e["stage"] != name] + [
@@ -551,5 +542,5 @@ class StagedRun:
                     "snapshot_id": uuid.uuid4().hex,
                 }
             ]
-            self._write(m)
+            _write_json_atomic(self.manifest_path, m)
         return out, False, wall

@@ -45,6 +45,10 @@ from pyspark.sql import functions as F
 
 from ktpm___ocr_spark.functions.exprutil import let, let2
 from ktpm___ocr_spark.functions.textstats import words_array
+from ktpm___ocr_spark.operators.text_kernels import (
+    lsh_bands_arrow,
+    shingle_metrics_arrow,
+)
 
 MINHASH_K = 16
 LSH_BANDS = 4  # 4 bands × 4 rows ≈ catches jaccard ≳ 0.6
@@ -157,59 +161,22 @@ def lsh_bands(
     text_col: str,
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """(id, band_idx, band_hash) — the LSH bucketing relation.
+    """(id, band_idx, band_hash) — the LSH bucketing relation: band b
+    is the first ``BAND_HEX`` hex chars of sha256 over the decimal
+    ``minhash_signature`` values ``b·rows+1 … (b+1)·rows``, joined by
+    ``\\x1f``.
 
-    ``impl="arrow"`` (default) computes the signatures in the
-    mapInArrow kernel (text_kernels.lsh_bands_arrow): bit-identical
-    values — same tokenizer, same per-permutation sha256, same band
-    hash, pinned by tests/test_text_kernels.py — at a fraction of the
-    expression path's per-row constant. The r6 composed probe measured
-    the expression form allocation-bound (per-shingle string
+    Computed in the mapInArrow kernel (text_kernels.lsh_bands_arrow),
+    bit-identical to that composition of :func:`minhash_signature`
+    (pinned by tests/test_text_kernels.py). The r6 composed probe
+    measured the Catalyst form allocation-bound (per-shingle string
     materialization + fold arrays; 62 % of the 1M-doc corpus-build wall
     clock), and its 16→4-sha negative result showed hashing itself was
     only ~14 % of the cost — so the win is eliminating Catalyst's
     per-shingle array materialization, which only a kernel can.
-    ``impl="expr"`` keeps the pure-Catalyst formulation: it is the
-    executable spec the kernel is property-tested against, and the
-    fallback for running without python workers.
     """
-    if impl == "arrow":
-        from ktpm___ocr_spark.operators.text_kernels import lsh_bands_arrow
-
-        return lsh_bands_arrow(df, id_col, text_col, k, bands)
-    if impl != "expr":
-        raise ValueError(f"unknown lsh_bands impl {impl!r}")
-    rows = k // bands
-    band_structs = let(
-        minhash_signature(F.col(text_col), k),
-        lambda sig: F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.cast("int").alias("band_idx"),
-                F.substring(
-                    F.sha2(
-                        F.concat_ws(
-                            "\x1f",
-                            *[
-                                F.element_at(
-                                    sig, (b * rows + r + 1).cast("int")
-                                ).cast("string")
-                                for r in range(rows)
-                            ],
-                        ),
-                        256,
-                    ),
-                    1,
-                    BAND_HEX,
-                ).alias("band_hash"),
-            ),
-        ),
-    )
-    return df.select(F.col(id_col), F.explode(band_structs).alias("b")).select(
-        id_col, "b.band_idx", "b.band_hash"
-    )
+    return lsh_bands_arrow(df, id_col, text_col, k, bands)
 
 
 def ngram_jaccard(a_text, b_text, n: int = SHINGLE_N) -> F.Column:
@@ -239,13 +206,48 @@ def ngram_containment(a_text, b_text, n: int = SHINGLE_N) -> F.Column:
     return let2(shingles(a_text, n), shingles(b_text, n), body)
 
 
+def _self_pairs(bands: DataFrame, id_col: str) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` with ``id_a < id_b`` for every two rows
+    of ``bands`` that share a ``(band_idx, band_hash)`` bucket — the
+    band self-join. Never materializes the O(n²) pair space: the join
+    key is the bucket, not the id."""
+    left, right = bands.alias("l"), bands.alias("r")
+    return (
+        left.join(
+            right,
+            (F.col("l.band_idx") == F.col("r.band_idx"))
+            & (F.col("l.band_hash") == F.col("r.band_hash"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+
+
+def _join_texts(
+    cand: DataFrame, texts: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """Attach ``text_a``/``text_b`` to a candidate relation carrying
+    ``id_a``/``id_b`` by two equi-joins against the ``(id, text)``
+    columns of ``texts`` — candidate-sized lookups, so verification
+    never computes over the corpus."""
+    texts = texts.select(F.col(id_col), F.col(text_col))
+    return cand.join(
+        texts.withColumnsRenamed({id_col: "id_a", text_col: "text_a"}), "id_a"
+    ).join(
+        texts.withColumnsRenamed({id_col: "id_b", text_col: "text_b"}), "id_b"
+    )
+
+
 def containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
     k: int = MINHASH_K,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Sub-document duplicate pairs: candidates re-scored by containment
     in BOTH directions; keep pairs where either direction ≥ threshold.
@@ -256,53 +258,19 @@ def containment_pairs(
     inside a 10× page has J ≈ 0.1 ⇒ band-match probability J⁴ ≈ 10⁻⁴),
     while rows=1 detects at 1−(1−J)^k (J = 0.1, k = 16 → 81 %). More
     candidates than the near-dup scheme — the exact containment verify
-    still runs on candidates only, never O(n²).
+    still runs on candidates only, never O(n²). The verify kernel
+    computes ``round(ngram_containment, 4)`` both ways, value-identical
+    to the Column spec (tests/test_text_kernels.py).
 
     Output: (id_a, id_b, cont_a_in_b, cont_b_in_a)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     df = df.repartition(par, id_col)
-    b = lsh_bands(df, id_col, text_col, k=k, bands=k, impl=impl).persist()
+    b = lsh_bands(df, id_col, text_col, k=k, bands=k).persist()
     try:
-        left, right = b.alias("l"), b.alias("r")
-        cand = (
-            left.join(
-                right,
-                (F.col("l.band_idx") == F.col("r.band_idx"))
-                & (F.col("l.band_hash") == F.col("r.band_hash"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"),
-            )
-            .distinct()
+        joined = _join_texts(_self_pairs(b, id_col), df, id_col, text_col)
+        scored = shingle_metrics_arrow(
+            joined, "text_a", "text_b", metrics=("cont_a_in_b", "cont_b_in_a")
         )
-        texts = df.select(F.col(id_col), F.col(text_col))
-        joined = cand.join(
-            texts.withColumnsRenamed({id_col: "id_a", text_col: "text_a"}), "id_a"
-        ).join(
-            texts.withColumnsRenamed({id_col: "id_b", text_col: "text_b"}), "id_b"
-        )
-        if impl == "arrow":
-            from ktpm___ocr_spark.operators.text_kernels import (
-                shingle_metrics_arrow,
-            )
-
-            scored = shingle_metrics_arrow(
-                joined, "text_a", "text_b",
-                metrics=("cont_a_in_b", "cont_b_in_a"),
-            )
-        else:
-            scored = joined.select(
-                "id_a",
-                "id_b",
-                F.round(
-                    ngram_containment(F.col("text_a"), F.col("text_b")), 4
-                ).alias("cont_a_in_b"),
-                F.round(
-                    ngram_containment(F.col("text_b"), F.col("text_a")), 4
-                ).alias("cont_b_in_a"),
-            )
         out = scored.filter(
             (F.col("cont_a_in_b") >= threshold)
             | (F.col("cont_b_in_a") >= threshold)
@@ -314,27 +282,6 @@ def containment_pairs(
         b.unpersist()
 
 
-def _verify_jaccard(joined: DataFrame, impl: str) -> DataFrame:
-    """Exact-Jaccard verification over a joined candidate relation
-    carrying text_a/text_b: the Arrow kernel (default) computes the
-    identical ``round(jaccard, 4)`` at ~50-200 µs/pair vs ~1.8 ms for
-    the Catalyst shingle-set expression (measured on the r7 nightly
-    probe: 322k pair verifies, 579 s expression-bound → seconds). The
-    expression path stays as the executable spec (property-pinned
-    value-equal in tests/test_text_kernels.py)."""
-    if impl == "arrow":
-        from ktpm___ocr_spark.operators.text_kernels import (
-            shingle_metrics_arrow,
-        )
-
-        return shingle_metrics_arrow(joined, "text_a", "text_b")
-    if impl != "expr":
-        raise ValueError(f"unknown verify impl {impl!r}")
-    return joined.withColumn(
-        "jaccard", F.round(ngram_jaccard(F.col("text_a"), F.col("text_b")), 4)
-    ).drop("text_a", "text_b")
-
-
 def minhash_near_dups(
     df: DataFrame,
     id_col: str,
@@ -342,13 +289,16 @@ def minhash_near_dups(
     threshold: float = 0.6,
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: bands → distinct candidate
     pairs → exact Jaccard verify ≥ threshold.
 
     Never materializes the O(n²) pair space: the self-join is on
-    (band_idx, band_hash) buckets only.
+    (band_idx, band_hash) buckets only. The verify runs in the
+    shingle-metrics kernel: the identical ``round(ngram_jaccard, 4)`` at
+    ~50-200 µs/pair vs ~1.8 ms for the Catalyst shingle-set expression
+    (measured on the r7 nightly probe: 322k pair verifies, 579 s
+    expression-bound → seconds).
 
     Physical notes: the input is repartitioned to cluster parallelism
     before the hash-heavy signature stage (a skinny scan often arrives in
@@ -364,29 +314,10 @@ def minhash_near_dups(
     # is released in the finally block below — the verified pair set (tiny
     # vs the bands relation) is eagerly materialized first, so no cached
     # bands blocks outlive the call even in long-lived sessions.
-    b = lsh_bands(df, id_col, text_col, k, bands, impl=impl).persist()
+    b = lsh_bands(df, id_col, text_col, k, bands).persist()
     try:
-        left = b.alias("l")
-        right = b.alias("r")
-        cand = (
-            left.join(
-                right,
-                (F.col("l.band_idx") == F.col("r.band_idx"))
-                & (F.col("l.band_hash") == F.col("r.band_hash"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-            )
-            .distinct()
-        )
-        texts = df.select(F.col(id_col), F.col(text_col))
-        joined = cand.join(
-            texts.withColumnsRenamed({id_col: "id_a", text_col: "text_a"}), "id_a"
-        ).join(
-            texts.withColumnsRenamed({id_col: "id_b", text_col: "text_b"}), "id_b"
-        )
-        verified = _verify_jaccard(joined, impl).filter(
+        joined = _join_texts(_self_pairs(b, id_col), df, id_col, text_col)
+        verified = shingle_metrics_arrow(joined, "text_a", "text_b").filter(
             F.col("jaccard") >= threshold
         ).select("id_a", "id_b", "jaccard")
         # materialize the (small) result so the bands relation can be freed
@@ -717,7 +648,6 @@ def incremental_near_dups(
     bands: int = LSH_BANDS,
     new_bands: DataFrame | None = None,
     eager: bool = True,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Cross-snapshot near-dup detection — the realistic 100 TB pattern:
     a new crawl INCREMENT arrives and must be deduped against the
@@ -775,7 +705,7 @@ def incremental_near_dups(
     nb = (
         new_bands
         if new_bands is not None
-        else lsh_bands(new_docs, id_col, text_col, k, bands, impl=impl)
+        else lsh_bands(new_docs, id_col, text_col, k, bands)
     ).persist()
     try:
         n, o = nb.alias("n"), old_bands.alias("o")
@@ -796,34 +726,15 @@ def incremental_near_dups(
             .distinct()
             .withColumn("pair_kind", F.lit("new_old"))
         )
-        l, r = nb.alias("l"), nb.alias("r")
-        newnew = (
-            l.join(
-                r,
-                (F.col("l.band_idx") == F.col("r.band_idx"))
-                & (F.col("l.band_hash") == F.col("r.band_hash"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"),
-            )
-            .distinct()
-            .withColumn("pair_kind", F.lit("new_new"))
-        )
-        cand = cross.unionByName(newnew)
+        newnew = _self_pairs(nb, id_col).withColumn("pair_kind", F.lit("new_new"))
         texts = old_texts.select(
             F.col(id_col), F.col(text_col)
         ).unionByName(new_docs.select(F.col(id_col), F.col(text_col)))
-        joined = cand.join(
-            texts.withColumnsRenamed({id_col: "id_a", text_col: "text_a"}),
-            "id_a",
-        ).join(
-            texts.withColumnsRenamed({id_col: "id_b", text_col: "text_b"}),
-            "id_b",
+        joined = _join_texts(
+            cross.unionByName(newnew), texts, id_col, text_col
         )
         verified = (
-            _verify_jaccard(joined, impl)
+            shingle_metrics_arrow(joined, "text_a", "text_b")
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "pair_kind", "jaccard")
         )

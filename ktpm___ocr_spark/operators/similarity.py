@@ -209,7 +209,6 @@ def embedding_near_dups(
     *,
     dim: int,
     round_dp: int = 5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via LSH bucketing + exact verify.
 
@@ -218,15 +217,14 @@ def embedding_near_dups(
     ``dim`` is REQUIRED (keyword-only): a first-row probe during plan
     construction would be a hidden driver-side action.
 
-    ``impl="arrow"`` (default) verifies candidates with the
-    ``cosine_pairs_arrow`` kernel (vectorized sequential-fold cosine +
-    exact HALF_UP boundary — bit-identical to the expression, pinned by
-    tests/test_text_kernels.py); ``impl="expr"`` is the executable
-    Catalyst spec. Either way the bucket join stays the one shuffle and
-    the verify is a projection over the candidate relation.
+    Candidates are verified by the ``cosine_pairs_arrow`` kernel
+    (vectorized sequential-fold cosine + exact HALF_UP boundary) —
+    bit-identical to ``round(cosine(a, b), round_dp) >= threshold``,
+    pinned by tests/test_text_kernels.py. The bucket join stays the one
+    shuffle and the verify is a projection over the candidate relation.
     """
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"unknown impl {impl!r}")
+    from ktpm___ocr_spark.operators.text_kernels import cosine_pairs_arrow
+
     planes = hyperplanes(dim, n_planes, seed)
     b = df.select(
         F.col(id_col),
@@ -239,32 +237,17 @@ def embedding_near_dups(
         (F.col("l.bucket") == F.col("r.bucket"))
         & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
     )
-    if impl == "arrow":
-        from ktpm___ocr_spark.operators.text_kernels import (
-            cosine_pairs_arrow,
-        )
-
-        return cosine_pairs_arrow(
-            cand.select(
-                F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"),
-                _to_double(F.col(f"l.{vec_col}")).alias("_va"),
-                _to_double(F.col(f"r.{vec_col}")).alias("_vb"),
-            ),
-            "_va",
-            "_vb",
-            threshold=threshold,
-            round_dp=round_dp,
-        )
-    return (
+    return cosine_pairs_arrow(
         cand.select(
             F.col(f"l.{id_col}").alias("id_a"),
             F.col(f"r.{id_col}").alias("id_b"),
-            F.round(
-                cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), round_dp
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
+            _to_double(F.col(f"l.{vec_col}")).alias("_va"),
+            _to_double(F.col(f"r.{vec_col}")).alias("_vb"),
+        ),
+        "_va",
+        "_vb",
+        threshold=threshold,
+        round_dp=round_dp,
     )
 
 

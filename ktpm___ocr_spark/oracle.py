@@ -17,7 +17,7 @@ Spark engine must reproduce, per document:
 
 pytest asserts exact span-sequence equality between this oracle and every
 Spark execution path (narrow array-HOF plan, exploded window plan, and
-Arrow ``mapInPandas`` plan).
+the ``mapInArrow`` kernel in ``operators/arrow_native.py``).
 
 The analogous reference behavior: per-stage filter chain at
 ``backend/pipeline.js:22-42`` with normalization in

@@ -2,8 +2,11 @@
 
 The reference executes its pipeline as a sequential fold of async filters
 over one document at a time (``backend/pipeline.js:22-42``). Our engine
-expresses the same semantics as declarative Spark plans. Three physical
-strategies, all proven span-sequence-equal to the pure-Python oracle:
+expresses the same semantics as declarative Spark plans. Two physical
+strategies live here, both proven span-sequence-equal to the pure-Python
+oracle; the Arrow-kernel path is
+:func:`ktpm___ocr_spark.operators.arrow_native.extract_arrow_native`,
+held to the same oracle:
 
 ``extract_narrow``  (DEFAULT — the 100 TB plan)
     Zero-shuffle: sort/normalize/classify/filter happen *inside* the span
@@ -21,21 +24,12 @@ strategies, all proven span-sequence-equal to the pure-Python oracle:
     compose other operators onto (memo-joins, per-span analytics), and to
     cross-validate the narrow plan.
 
-``extract_arrow``
-    ``mapInPandas`` over Arrow record batches — the vectorized
-    pandas/numpy rewrite of the block-fusion classifier per the
-    north_star. Normalization via pandas ``str.replace`` (regex), word
-    counts via vectorized ``str.count``, neighbor logic via numpy shifts
-    with document-boundary fixups. No per-row Python in the batch body.
-
 Classifier: Boilerpipe NumWordsRulesClassifier decision rules
 (Kohlschütter et al., WSDM 2010; public algorithm) — see
 :mod:`ktpm___ocr_spark.oracle` for the reference implementation.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -50,7 +44,7 @@ from ktpm___ocr_spark.oracle import (
     WORD_RE_PATTERN,
 )
 
-__all__ = ["extract_narrow", "extract_exploded", "extract_arrow"]
+__all__ = ["extract_narrow", "extract_exploded"]
 
 
 def _norm_col(variant: str, text: Column) -> Column:
@@ -277,124 +271,3 @@ def extract_exploded(
         rel.select("doc_id", "kind", "text", "media_ref", "offset"),
         df.select("doc_id"),
     )
-
-
-# =====================================================================
-# Path 3: Arrow-vectorized mapInPandas (north_star-mandated path)
-# =====================================================================
-def extract_arrow(
-    df: DataFrame, variant: str = "pdf", boilerplate: str = "drop"
-) -> DataFrame:
-    """Block-fusion classifier over Arrow batches, vectorized with pandas
-    and numpy — no per-row Python inside the batch body.
-
-    One row = one document (narrow; no shuffle). Each Arrow batch is
-    flattened to span-level numpy/pandas arrays, normalized and classified
-    with vectorized ops, and re-folded to span arrays per document.
-    """
-    import re as _re
-
-    import numpy as np
-    import pandas as pd
-
-    # re.ASCII pins \s/\S to the JVM plan's Java-default (ASCII) semantics
-    # so all three execution paths agree on non-ASCII whitespace (NBSP,
-    # U+2028 are content, not separators) — see textnorm.py.
-    crlf = _re.compile(r"\r\n?", _re.ASCII)
-    collapse = _re.compile(r"\n{2,}" if variant == "pdf" else r"\n{3,}", _re.ASCII)
-    trim = _re.compile(r"^\s+|\s+$", _re.ASCII)
-    word_re = _re.compile(WORD_RE_PATTERN, _re.ASCII)
-    anchor_re = _re.compile(ANCHOR_RE_PATTERN, _re.ASCII)
-    relabel = boilerplate == "relabel"
-    if boilerplate not in ("drop", "relabel"):
-        raise ValueError(f"unknown boilerplate mode {boilerplate!r}")
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                yield pdf
-                continue
-            # ---- flatten: spans of the whole batch as flat arrays
-            counts = pdf["spans"].map(len).to_numpy()
-            doc_idx = np.repeat(np.arange(len(pdf)), counts)
-            flat = [s for spans in pdf["spans"] for s in spans]
-            kind = pd.Series([s["kind"] for s in flat], dtype="object")
-            text = pd.Series([s["text"] for s in flat], dtype="object")
-            mref = pd.Series([s["media_ref"] for s in flat], dtype="object")
-            offset = np.array([s["offset"] for s in flat], dtype="int64")
-
-            # ---- sort by (doc, offset): the span-sequence invariant
-            order = np.lexsort((offset, doc_idx))
-            doc_idx, offset = doc_idx[order], offset[order]
-            kind = kind.iloc[order].reset_index(drop=True)
-            text = text.iloc[order].reset_index(drop=True)
-            mref = mref.iloc[order].reset_index(drop=True)
-
-            media = (kind == "media").to_numpy()
-            # ---- vectorized normalization (text spans only)
-            norm = (
-                text.str.replace(crlf, "\n", regex=True)
-                .str.replace(collapse, "\n\n", regex=True)
-                .str.replace(trim, "", regex=True)
-            )
-            norm = norm.where(~media, None)
-            mref = mref.where(media, None)
-
-            # ---- vectorized features
-            words = norm.str.count(word_re).fillna(0).to_numpy(dtype="int64")
-            link_words = (
-                norm.str.findall(anchor_re)
-                .map(
-                    lambda ms: sum(len(word_re.findall(m)) for m in ms)
-                    if isinstance(ms, list)
-                    else 0
-                )
-                .to_numpy(dtype="int64")
-            )
-            ld = np.where(words > 0, link_words / np.maximum(words, 1), 0.0)
-
-            # ---- neighbor features via shifts + doc-boundary fixup
-            pw = np.concatenate(([0], words[:-1]))
-            pld = np.concatenate(([0.0], ld[:-1]))
-            nw = np.concatenate((words[1:], [0]))
-            first = np.concatenate(
-                ([True], doc_idx[1:] != doc_idx[:-1])
-            )
-            last = np.concatenate((doc_idx[:-1] != doc_idx[1:], [True]))
-            pw[first], pld[first], nw[last] = 0, 0.0, 0
-
-            # ---- NumWordsRulesClassifier, fully vectorized
-            keep = np.where(
-                ld > CURR_LINK_DENSITY_MAX,
-                False,
-                np.where(
-                    pld <= PREV_LINK_DENSITY_MAX,
-                    (words > 16) | (nw > 15) | (pw > 4),
-                    (words > 40) | (nw > 17),
-                ),
-            )
-
-            # ---- refold to one span-array per document
-            out_kind = kind.to_numpy(dtype="object")
-            if relabel:
-                out_kind = np.where(media | keep, out_kind, "boilerplate")
-                emit = np.ones(len(keep), dtype=bool)
-            else:
-                emit = media | keep
-            spans_out: list[list[dict]] = [[] for _ in range(len(pdf))]
-            norm_np = norm.to_numpy(dtype="object")
-            mref_np = mref.to_numpy(dtype="object")
-            for j in np.flatnonzero(emit):
-                spans_out[doc_idx[j]].append(
-                    {
-                        "kind": out_kind[j],
-                        "text": norm_np[j],
-                        "media_ref": mref_np[j],
-                        "offset": int(offset[j]),
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "spans": spans_out}
-            )
-
-    return df.mapInPandas(process, schema=DOCUMENTS_SCHEMA)

@@ -35,7 +35,7 @@ _TRIM = r"^\s+|\s+$"  # full-whitespace trim (JS String.trim analogue)
 # [ \t\n\x0B\f\r]): the engine's hot path runs Java regex / btrim, so the
 # Python mirrors compile with re.ASCII — otherwise Python's Unicode-aware
 # \s would treat NBSP ( ) / LINE SEPARATOR ( ) as trimmable and
-# the three "span-sequence-equal" paths would diverge on non-ASCII
+# the "span-sequence-equal" paths would diverge on non-ASCII
 # whitespace. NBSP et al. are deliberately *content*, not whitespace.
 _CRLF_RE = re.compile(_CRLF, re.ASCII)
 _PDF_RE = re.compile(_PDF_COLLAPSE, re.ASCII)

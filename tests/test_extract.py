@@ -11,7 +11,7 @@ import pytest
 from ktpm___ocr_spark.corpus import generate_rows, generate_df
 from ktpm___ocr_spark.operators.arrow_native import extract_arrow_native
 from ktpm___ocr_spark.oracle import extract_corpus
-from ktpm___ocr_spark.pipeline import extract_arrow, extract_exploded, extract_narrow
+from ktpm___ocr_spark.pipeline import extract_exploded, extract_narrow
 
 N_DOCS = 150
 SEED = 42
@@ -19,7 +19,6 @@ SEED = 42
 PATHS = {
     "narrow": extract_narrow,
     "exploded": extract_exploded,
-    "arrow": extract_arrow,
     "arrow_native": extract_arrow_native,
 }
 

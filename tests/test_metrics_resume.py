@@ -240,6 +240,35 @@ def test_manifest_mutations_are_thread_safe(spark, tmp_path_factory):
     assert m["status"] == "cancelled", "cancel marker overwritten by a commit"
 
 
+def test_incremental_run_commits_are_thread_safe(spark, tmp_path):
+    """Concurrent delta commits into one IncrementalRun manifest: the
+    flock-serialized read-modify-write keeps every file entry."""
+    import threading
+
+    from ktpm___ocr_spark.metrics import IncrementalRun
+
+    run = IncrementalRun(spark, str(tmp_path / "out"))
+    files = []
+    for i in range(64):
+        f = tmp_path / f"f{i:02d}.parquet"
+        f.write_bytes(b"x")
+        files.append(str(f))
+    barrier = threading.Barrier(8)
+
+    def commit_some(base):
+        barrier.wait()
+        for i in range(base, base + 8):
+            run._commit([files[i]], f"d{i:02d}")
+
+    threads = [threading.Thread(target=commit_some, args=(i * 8,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert run.processed() == set(files), "lost file entries under concurrency"
+
+
 # ---------------------------------------------------------------------------
 # StagedRun: stage-granular resume for composed corpus chains
 # ---------------------------------------------------------------------------
@@ -377,15 +406,14 @@ def test_staged_run_partial_write_is_overwritten(spark, tmp_path, sf001_dir):
 
 
 def test_manifest_classes_reject_remote_out_dir(spark):
-    """Both manifest classes do their JSON I/O with os-level calls while
+    """Every manifest class does its JSON I/O with os-level calls while
     stage data goes through Spark writers — a remote out_dir would
     silently break resume (r7 advice). Must fail loudly at construction."""
     import pytest
 
-    from ktpm___ocr_spark.metrics import CheckpointedRun, StagedRun
+    from ktpm___ocr_spark.metrics import CheckpointedRun, IncrementalRun, StagedRun
 
     for bad in ("hdfs://nn:8020/corpus/run", "s3a://bucket/run", "dbfs:/run"):
-        with pytest.raises(ValueError, match="local-filesystem"):
-            StagedRun(spark, bad)
-        with pytest.raises(ValueError, match="local-filesystem"):
-            CheckpointedRun(spark, bad)
+        for cls in (StagedRun, CheckpointedRun, IncrementalRun):
+            with pytest.raises(ValueError, match="local-filesystem"):
+                cls(spark, bad)

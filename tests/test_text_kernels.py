@@ -2,21 +2,27 @@
 
 The Arrow kernels are only allowed to exist because they are
 bit-identical to the Catalyst expression forms (which the driver's
-DuckDB oracles mirror). These tests ARE that contract: fixture corpus
-plus adversarial rows through both paths, full-row equality — and a
+DuckDB oracles mirror). These tests ARE that contract: each operator
+runs on fixture corpus plus adversarial rows and is compared, full-row,
+against a test-local composition of the public Column specs
+(``minhash_signature``, ``ngram_jaccard``, ``ngram_containment``,
+``gopher_keep_expr``, ``similarity.cosine``/``lsh_bucket``) — and a
 pure-math pin of the HALF_UP round-boundary transform the gate kernel
 uses in place of per-row Decimal rounding.
 """
 
 from __future__ import annotations
 
+import inspect
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from ktpm___ocr_spark.functions import textstats
+from ktpm___ocr_spark.functions.exprutil import let
 from ktpm___ocr_spark.operators import dedup as dd
+from ktpm___ocr_spark.operators import similarity
 from ktpm___ocr_spark.operators import text_kernels as tk
 
 # deterministic adversarial rows: whitespace-class edges (\x0b is the
@@ -75,11 +81,93 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+# ------------------------------------------- specs (Column compositions)
+
+
+def _lsh_bands_spec(df, id_col, text_col, k=dd.MINHASH_K, bands=dd.LSH_BANDS):
+    """(id, band_idx, band_hash): band b is the first BAND_HEX hex chars
+    of sha256 over the decimal ``minhash_signature`` values of rows
+    b·r+1 … (b+1)·r, joined by \\x1f."""
+    rows = k // bands
+    band_structs = let(
+        dd.minhash_signature(F.col(text_col), k),
+        lambda sig: F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: F.struct(
+                b.cast("int").alias("band_idx"),
+                F.substring(
+                    F.sha2(
+                        F.concat_ws(
+                            "\x1f",
+                            *[
+                                F.element_at(
+                                    sig, (b * rows + r + 1).cast("int")
+                                ).cast("string")
+                                for r in range(rows)
+                            ],
+                        ),
+                        256,
+                    ),
+                    1,
+                    dd.BAND_HEX,
+                ).alias("band_hash"),
+            ),
+        ),
+    )
+    return df.select(F.col(id_col), F.explode(band_structs).alias("b")).select(
+        id_col, "b.band_idx", "b.band_hash"
+    )
+
+
+def _candidate_texts_spec(docs, bands_rel):
+    """Distinct band-sharing (id_a < id_b) pairs of doc_id/text ``docs``
+    with both texts attached."""
+    l, r = bands_rel.alias("l"), bands_rel.alias("r")
+    cand = (
+        l.join(
+            r,
+            (F.col("l.band_idx") == F.col("r.band_idx"))
+            & (F.col("l.band_hash") == F.col("r.band_hash"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        )
+        .select(
+            F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
+        )
+        .distinct()
+    )
+    texts = docs.select("doc_id", "text")
+    return cand.join(
+        texts.withColumnsRenamed({"doc_id": "id_a", "text": "text_a"}), "id_a"
+    ).join(
+        texts.withColumnsRenamed({"doc_id": "id_b", "text": "text_b"}), "id_b"
+    )
+
+
+def _gopher_gate_spec(df):
+    return df.select(
+        F.col("doc_id"), textstats.gopher_keep_expr("text").alias("keep")
+    )
+
+
+def test_operators_take_no_impl_switch():
+    """One production path per operator: the Column specs live in the
+    package and in these tests, never as an ``impl=`` switch."""
+    for fn in (
+        dd.lsh_bands,
+        dd.minhash_near_dups,
+        dd.containment_pairs,
+        dd.incremental_near_dups,
+        textstats.gopher_gate,
+        similarity.embedding_near_dups,
+    ):
+        assert "impl" not in inspect.signature(fn).parameters, fn.__name__
+
+
 @pytest.mark.parametrize("bands", [4, 16])
 def test_lsh_bands_kernel_equals_expression_adversarial(spark, bands):
     df = _df(spark, ADVERSARIAL + _rand_texts(120, seed=7))
-    a = dd.lsh_bands(df, "doc_id", "text", k=16, bands=bands, impl="arrow")
-    e = dd.lsh_bands(df, "doc_id", "text", k=16, bands=bands, impl="expr")
+    a = dd.lsh_bands(df, "doc_id", "text", k=16, bands=bands)
+    e = _lsh_bands_spec(df, "doc_id", "text", k=16, bands=bands)
     assert a.schema.fieldNames() == e.schema.fieldNames()
     assert [f.dataType for f in a.schema.fields] == [
         f.dataType for f in e.schema.fields
@@ -89,8 +177,8 @@ def test_lsh_bands_kernel_equals_expression_adversarial(spark, bands):
 
 def test_lsh_bands_kernel_equals_expression_fixture(spark, sf001_dir):
     docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-    a = dd.lsh_bands(docs, "doc_id", "text", impl="arrow")
-    e = dd.lsh_bands(docs, "doc_id", "text", impl="expr")
+    a = dd.lsh_bands(docs, "doc_id", "text")
+    e = _lsh_bands_spec(docs, "doc_id", "text")
     assert _rows(a) == _rows(e)
 
 
@@ -150,8 +238,8 @@ BOUNDARY_DOCS = [
 
 def test_gopher_gate_kernel_equals_expression_boundary_and_random(spark):
     df = _df(spark, ADVERSARIAL + BOUNDARY_DOCS + _rand_texts(300, seed=21))
-    a = textstats.gopher_gate(df, "doc_id", "text", impl="arrow")
-    e = textstats.gopher_gate(df, "doc_id", "text", impl="expr")
+    a = textstats.gopher_gate(df, "doc_id", "text")
+    e = _gopher_gate_spec(df)
     assert _rows(a) == _rows(e)
     # the boundary fixtures exercise BOTH decisions (a gate that says
     # one thing for every row would vacuously "match")
@@ -161,8 +249,8 @@ def test_gopher_gate_kernel_equals_expression_boundary_and_random(spark):
 
 def test_gopher_gate_kernel_equals_expression_fixture(spark, sf01_dir):
     docs = spark.read.parquet(f"{sf01_dir}/documents.parquet")
-    a = textstats.gopher_gate(docs, "doc_id", "text", impl="arrow")
-    e = textstats.gopher_gate(docs, "doc_id", "text", impl="expr")
+    a = textstats.gopher_gate(docs, "doc_id", "text")
+    e = _gopher_gate_spec(docs)
     assert _rows(a) == _rows(e)
 
 
@@ -176,31 +264,12 @@ def test_gopher_filter_arrow_matches_expression_filter(spark, sf001_dir):
 
 def test_minhash_near_dups_end_to_end_unchanged_by_kernel(spark, sf001_dir):
     """The consumer contract: the full banded near-dup pipeline returns
-    the same verified pair set whichever banding impl feeds it."""
+    the same verified pair set as the Column-spec composition (spec
+    bands → candidates → round(ngram_jaccard, 4) ≥ threshold)."""
     docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
     got = dd.minhash_near_dups(docs, "doc_id", "text", threshold=0.5)
-    b_expr = dd.lsh_bands(docs, "doc_id", "text", impl="expr")
-    l, r = b_expr.alias("l"), b_expr.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    texts = docs.select("doc_id", "text")
     want = (
-        cand.join(
-            texts.withColumnsRenamed({"doc_id": "id_a", "text": "text_a"}), "id_a"
-        )
-        .join(
-            texts.withColumnsRenamed({"doc_id": "id_b", "text": "text_b"}), "id_b"
-        )
+        _candidate_texts_spec(docs, _lsh_bands_spec(docs, "doc_id", "text"))
         .withColumn(
             "jaccard",
             F.round(dd.ngram_jaccard(F.col("text_a"), F.col("text_b")), 4),
@@ -378,9 +447,27 @@ def test_shingle_metrics_kernel_equals_expression_values(spark):
 
 
 def test_containment_pairs_kernel_equals_expression(spark, sf001_dir):
+    """containment_pairs ≡ spec bands (k bands of one row) → candidates
+    → round(ngram_containment, 4) both ways, either direction ≥ 0.5."""
     docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
-    a = dd.containment_pairs(docs, "doc_id", "text", impl="arrow")
-    e = dd.containment_pairs(docs, "doc_id", "text", impl="expr")
+    a = dd.containment_pairs(docs, "doc_id", "text")
+    k = dd.MINHASH_K
+    e = (
+        _candidate_texts_spec(
+            docs, _lsh_bands_spec(docs, "doc_id", "text", k=k, bands=k)
+        )
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                dd.ngram_containment(F.col("text_a"), F.col("text_b")), 4
+            ).alias("cont_a_in_b"),
+            F.round(
+                dd.ngram_containment(F.col("text_b"), F.col("text_a")), 4
+            ).alias("cont_b_in_a"),
+        )
+        .filter((F.col("cont_a_in_b") >= 0.5) | (F.col("cont_b_in_a") >= 0.5))
+    )
     assert _rows(a) == _rows(e)
 
 
@@ -557,11 +644,15 @@ def test_cosine_pairs_kernel_nan_matches_spark_ordering(spark):
 
 
 def test_embedding_near_dups_arrow_equals_expr(spark):
-    """The full operator (bucket join + verify) is value-identical under
-    impl='arrow' vs impl='expr' on the planted near-dup corpus."""
+    """The full operator (bucket join + kernel verify) is value-identical
+    to the Column-spec composition (lsh_bucket self-join →
+    round(cosine, 5) ≥ threshold) on the planted near-dup corpus."""
     from ktpm___ocr_spark.operators.similarity import (
         center_vectors,
+        cosine,
         embedding_near_dups,
+        hyperplanes,
+        lsh_bucket,
     )
 
     rng = random.Random(41)
@@ -581,17 +672,33 @@ def test_embedding_near_dups_arrow_equals_expr(spark):
         dim=32,
     )
     emb = emb.localCheckpoint(eager=True)  # same input relation twice
-    res = {}
-    for impl in ("arrow", "expr"):
-        res[impl] = {
-            (r["id_a"], r["id_b"]): r["cos"]
-            for r in embedding_near_dups(
-                emb, "id", "vec", threshold=0.8, n_planes=6, dim=32,
-                impl=impl,
-            ).collect()
-        }
-    assert res["arrow"] == res["expr"]
-    assert len(res["arrow"]) >= 30
+    got = {
+        (r["id_a"], r["id_b"]): r["cos"]
+        for r in embedding_near_dups(
+            emb, "id", "vec", threshold=0.8, n_planes=6, dim=32
+        ).collect()
+    }
+    b = emb.select(
+        "id", "vec", lsh_bucket(F.col("vec"), hyperplanes(32, 6, 7)).alias("bucket")
+    )
+    want = {
+        (row["id_a"], row["id_b"]): row["cos"]
+        for row in b.alias("l")
+        .join(
+            b.alias("r"),
+            (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.id") < F.col("r.id")),
+        )
+        .select(
+            F.col("l.id").alias("id_a"),
+            F.col("r.id").alias("id_b"),
+            F.round(cosine(F.col("l.vec"), F.col("r.vec")), 5).alias("cos"),
+        )
+        .filter(F.col("cos") >= 0.8)
+        .collect()
+    }
+    assert got == want
+    assert len(got) >= 30
 
 
 # ------------------------------------------- r7 review fixes
@@ -659,7 +766,7 @@ def test_minhash_k_beyond_salt_family_raises(spark):
     the band join degenerates to a cross pairing (r7 review)."""
     df = _df(spark, ["some words here for banding"])
     with pytest.raises(ValueError, match="salt family"):
-        dd.lsh_bands(df, "doc_id", "text", k=32, bands=4, impl="expr")
+        dd.minhash_signature(F.col("text"), k=32)
     with pytest.raises(ValueError, match="salt family"):
         tk.lsh_bands_arrow(df, "doc_id", "text", k=32, bands=4).collect()
 
@@ -668,7 +775,7 @@ def test_lsh_bands_arrow_chunked_flush_bit_identical(spark):
     """The doc-boundary chunk flush (bounding the xor transient on
     mega-doc batches) must not change a single band hash: force a tiny
     chunk cap so every flush path runs, compare against the unchunked
-    kernel and the expression."""
+    kernel and the Column spec."""
     texts = ADVERSARIAL + _rand_texts(60, seed=17)
     df = _df(spark, texts)
     base = {
@@ -683,7 +790,7 @@ def test_lsh_bands_arrow_chunked_flush_bit_identical(spark):
     }
     expr = {
         (r["doc_id"], r["band_idx"]): r["band_hash"]
-        for r in dd.lsh_bands(df, "doc_id", "text", impl="expr").collect()
+        for r in _lsh_bands_spec(df, "doc_id", "text").collect()
     }
     assert chunked == base == expr
 
