@@ -32,7 +32,7 @@ from ktpm___ocr_spark.operators import dedup as dd
 from ktpm___ocr_spark.operators import multimodal as mm
 from ktpm___ocr_spark.operators import similarity as sim
 from ktpm___ocr_spark.operators import windows as win
-from ktpm___ocr_spark.pipeline import extract_narrow
+from ktpm___ocr_spark.operators.arrow_native import extract_arrow_native
 
 SEP = "\x1f"
 SQL_SEP = "chr(31)"
@@ -51,8 +51,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # offsets ((j·37) mod 1048573 — 37 invertible mod the prime, so order ≠
 # array order, and offsets stay COLLISION-FREE for docs up to ~906k chunks
 # (~57 MB); the media offset 2000 is first reachable at j=906928, so text
-# and media offsets never tie either. Unique offsets make the Spark
-# offset-only array_sort comparator and DuckDB's full-struct list_sort
+# and media offsets never tie either. Unique offsets make the engine's
+# offset-only sort and DuckDB's full-struct list_sort
 # produce identical orderings — no tie-break divergence possible); every
 # 5th chunk gains CRLF + newline-run markup (exercises P5 normalization),
 # every 7th≡3 chunk is wrapped in an anchor (exercises link-density and
@@ -217,8 +217,8 @@ def _scratch_dir(prefix: str) -> str:
 def entry(spark: SparkSession) -> DataFrame:
     """Synthesize interleaved spans from the sf0.001 documents table
     (deterministic chunking + pseudo-shuffled offsets + a media span per
-    doc), run the zero-shuffle narrow extraction plan, return the
-    extracted table."""
+    doc), run the production extraction path (extract_arrow_native),
+    return the extracted table."""
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
     chunks = chunking.chunk_array(F.col("text"), 64)
     text_spans = F.transform(
@@ -244,7 +244,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(text_spans, F.array(media_span)).alias("spans"),
     )
-    return extract_narrow(spans_df, variant="pdf", boilerplate="drop")
+    return extract_arrow_native(spans_df, variant="pdf", boilerplate="drop")
 
 
 # =====================================================================
@@ -1711,17 +1711,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---------------- flagship: full extraction pipeline, hash-checked ----------------
     def extract_synth(spark, sf):
-        """P4 flagship: docs-derived span synthesis → extract_narrow
+        """P4 flagship: docs-derived span synthesis → extract_arrow_native
         (sort, normalize, classify, block-fusion filter) → canonical
         string projection. Fully DuckDB-oracle-checked."""
-        out = extract_narrow(_docs_spans_df(spark, sf), variant="pdf", boilerplate="drop")
+        out = extract_arrow_native(
+            _docs_spans_df(spark, sf), variant="pdf", boilerplate="drop"
+        )
         return out.select("doc_id", _spans_canon(F.col("spans")).alias("spans_canon"))
 
     q["extract_pipeline_synth"] = extract_synth
 
     def extract_relabel(spark, sf):
         """P4 relabel mode: boilerplate spans kept but re-kinded."""
-        out = extract_narrow(
+        out = extract_arrow_native(
             _docs_spans_df(spark, sf), variant="pdf", boilerplate="relabel"
         )
         return out.select("doc_id", _spans_canon(F.col("spans")).alias("spans_canon"))
@@ -1729,10 +1731,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["extract_pipeline_relabel"] = extract_relabel
 
     # NOTE (r4): the generator-corpus flagship variant (xxhash64-seeded
-    # synth_corpus → extract_narrow) is pytest-only now — its seeding is
+    # synth_corpus → extraction) is pytest-only now — its seeding is
     # not reproducible in DuckDB, the driver does not accept rows-only
     # entries, and its parquet-derived twin `extract_pipeline_synth` IS
-    # driver-green.  Coverage: tests/test_pipeline.py + the registration
+    # oracle-checked.  Coverage: tests/test_extract.py + the registration
     # invariant in tests/test_entry.py.
 
     def s8_checkpoint(spark, sf):
@@ -1745,7 +1747,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         out_dir = _scratch_dir("ktpm_ckpt_")
         run = CheckpointedRun(spark, out_dir, n_buckets=8)
-        run.run(_docs_spans_df(spark, sf), extract_narrow)
+        run.run(_docs_spans_df(spark, sf), extract_arrow_native)
         return run.result().select(
             "doc_id", _spans_canon(F.col("spans")).alias("spans_canon")
         )
@@ -1760,7 +1762,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         result, metrics_fn = run_with_metrics(
             spark,
             {
-                "extract": lambda df: extract_narrow(df),
+                "extract": lambda df: extract_arrow_native(df),
                 "flatten": lambda df: df.select(
                     "doc_id", F.explode("spans").alias("s")
                 ),

@@ -1,4 +1,4 @@
-"""Arrow-native extraction: ``mapInArrow`` + pyarrow C++ kernels.
+r"""Arrow-native extraction: ``mapInArrow`` + pyarrow C++ kernels.
 
 The purest form of the input_hint's "vectorized pandas/Arrow UDFs, no
 per-row Python": record batches flow Spark→Arrow with zero conversion,
@@ -12,12 +12,18 @@ counting (Python ``findall``) for the ~15 % of spans that contain ``<a``
 (RE2 kernels cannot extract *all* group matches); everything else is
 columnar.
 
-Why this path exists alongside the JVM-narrow plan (pipeline.py): each
-Spark python-worker is a separate OS process with its own heap — the
-extraction compute never shares an allocator across cores, which is
-exactly the contention that limits the single-JVM plan's N→4N scaling
-(see BENCH/BASELINE.md). Same semantics, proven span-sequence-equal to
-the oracle by tests/test_extract.py.
+This is the production extraction path: ``entry()``, ``convert_batch``
+and the registry's extraction queries all run it. Each Spark
+python-worker is a separate OS process with its own heap, so the
+extraction compute never shares an allocator across cores, the
+contention that limits the single-JVM plan's scaling (BENCH/BASELINE.md);
+on a 4-vCPU host it runs ~1.75× faster than ``pipeline.extract_narrow``,
+which stays as the all-JVM spec. Both are span-sequence-equal to the
+oracle (tests/test_extract.py, tests/test_property.py).
+
+Whitespace is the ASCII set ``textnorm._WS_CHARS`` everywhere, spelled
+out rather than written ``\s``: RE2's ``\s`` lacks ``\x0B``, which
+Java's ``\s``, the oracle and the JVM plan all treat as whitespace.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from ktpm___ocr_spark.corpus import DOCUMENTS_SCHEMA
 from ktpm___ocr_spark.oracle import (
@@ -34,8 +41,12 @@ from ktpm___ocr_spark.oracle import (
     PREV_LINK_DENSITY_MAX,
     WORD_RE_PATTERN,
 )
+from ktpm___ocr_spark.textnorm import _WS_CHARS
 
 __all__ = ["extract_arrow_native"]
+
+# WORD_RE_PATTERN (\S+) for RE2, with the Java/oracle whitespace set
+_WORD_RE2 = f"[^{_WS_CHARS}]+"
 
 
 def extract_arrow_native(
@@ -53,10 +64,7 @@ def extract_arrow_native(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        # ASCII-pinned like the other paths (textnorm.py). RE2's \s (the
-        # pyarrow kernels below) is also ASCII-only; known residual delta:
-        # RE2 \s excludes \x0B where Java/Python-ASCII include it — no
-        # corpus fixture exercises \x0B through this path.
+        # ASCII-pinned like the other paths (textnorm.py)
         anchor_re = re.compile(ANCHOR_RE_PATTERN, re.ASCII)
         word_re = re.compile(WORD_RE_PATTERN, re.ASCII)
 
@@ -97,10 +105,10 @@ def extract_arrow_native(
                 pc.fill_null(pc.equal(kind, "media"), False)
             ).astype(bool)
 
-            # ---- normalization: three RE2 kernel passes over ONE array
+            # ---- normalization: two RE2 passes + a trim over ONE array
             norm = pc.replace_substring_regex(text, pattern=r"\r\n?", replacement="\n")
             norm = pc.replace_substring_regex(norm, pattern=collapse_pat, replacement="\n\n")
-            norm = pc.replace_substring_regex(norm, pattern=r"^\s+|\s+$", replacement="")
+            norm = pc.utf8_trim(norm, characters=_WS_CHARS)
             # media spans carry no text; text spans carry no media_ref
             media_pa = pa.array(media)
             norm = pc.if_else(media_pa, pa.nulls(n_spans, pa.string()), norm)
@@ -108,7 +116,7 @@ def extract_arrow_native(
 
             # ---- features: C++ word count; Python only for anchor spans
             words = np.asarray(
-                pc.fill_null(pc.count_substring_regex(norm, pattern=WORD_RE_PATTERN), 0),
+                pc.fill_null(pc.count_substring_regex(norm, pattern=_WORD_RE2), 0),
                 dtype=np.int64,
             )
             has_anchor = np.asarray(
@@ -171,4 +179,8 @@ def extract_arrow_native(
                 [doc_ids, out_spans], names=["doc_id", "spans"]
             )
 
-    return df.mapInArrow(process, schema=DOCUMENTS_SCHEMA)
+    # only the two columns the kernel reads cross into Python; doc_id
+    # passes through untouched, so it keeps the input's type
+    df = df.select("doc_id", "spans")
+    schema = T.StructType([df.schema["doc_id"], DOCUMENTS_SCHEMA["spans"]])
+    return df.mapInArrow(process, schema=schema)

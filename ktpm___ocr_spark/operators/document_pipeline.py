@@ -13,8 +13,9 @@ documents table:
 2. **Preprocess (P3 analogue)** — media spans decoded via the stubbed
    Arrow decode (multimodal.py); raw/pre hashes recorded
    (preprocessFilter.js:17-50).
-3. **OCR analogue (P4)** — main-content text extraction: the narrow
-   classify/normalize plan, kept text spans stitched in offset order
+3. **OCR analogue (P4)** — main-content text extraction: the production
+   classify/normalize path (``extract_arrow_native``), kept text spans
+   stitched in offset order
    (ocrFilter.js produces ``text`` + ``textHash`` + langDetected meta).
 4. **Translate (C1-C3 + P7/P8)** — lang-code normalization, blank-skip,
    4500-char chunked map with re-stitch. The reference calls external
@@ -44,8 +45,8 @@ from ktpm___ocr_spark.functions.hashing import (
 )
 from ktpm___ocr_spark.functions.langmap import normalize_lang, skip_if_blank
 from ktpm___ocr_spark.functions.textstats import lang_id
+from ktpm___ocr_spark.operators.arrow_native import extract_arrow_native
 from ktpm___ocr_spark.operators.render import render_documents
-from ktpm___ocr_spark.pipeline import extract_narrow
 
 
 def stitch_text(spans: Column) -> Column:
@@ -89,7 +90,7 @@ def convert_batch(
     reps = keyed.filter(F.col("_rn") == 1).select("e2e_key", "doc_id", "spans")
 
     # -- 2+3. preprocess + OCR analogue: classify, normalize, stitch
-    extracted = extract_narrow(reps, variant="pdf", boilerplate="drop")
+    extracted = extract_arrow_native(reps, variant="pdf", boilerplate="drop")
     ocr = (
         reps.drop("spans")
         .join(extracted, "doc_id")

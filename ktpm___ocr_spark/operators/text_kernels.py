@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ktpm___ocr_spark.textnorm import _WS_CHARS
+
 __all__ = [
     "lsh_bands_arrow",
     "gopher_filter_arrow",
@@ -57,11 +59,11 @@ __all__ = [
     "cosine_pairs_arrow",
 ]
 
-# Java regex \s (Pattern.split in Spark's `split`) is the ASCII class
-# [ \t\n\x0B\f\r]; spelled explicitly so the Python tokenizer matches it
+# Java regex \s (Pattern.split in Spark's `split`) is the ASCII set
+# textnorm._WS_CHARS; spelled explicitly so the Python tokenizer matches it
 # exactly (Python-ASCII \s would also match, but explicit beats implicit
 # on the one character — \x0b — where RE2's \s disagrees).
-_WS_CLASS = "[ \t\n\x0b\f\r]"
+_WS_CLASS = f"[{_WS_CHARS}]"
 _SPLIT_RE = re.compile(_WS_CLASS + "+")
 
 _SHINGLE_N = 3  # == dedup.SHINGLE_N (pinned by tests/test_text_kernels.py)

@@ -16,8 +16,10 @@ Spark engine must reproduce, per document:
 6. emit the ordered ``(kind, text, media_ref, offset)`` sequence.
 
 pytest asserts exact span-sequence equality between this oracle and every
-Spark execution path (narrow array-HOF plan, exploded window plan, and
-the ``mapInArrow`` kernel in ``operators/arrow_native.py``).
+Spark execution path (the production ``mapInArrow`` kernel in
+``operators/arrow_native.py`` and the array-HOF spec plan in
+``pipeline.py``). Step 1's sort is stable: spans with tied offsets keep
+their input order.
 
 The analogous reference behavior: per-stage filter chain at
 ``backend/pipeline.js:22-42`` with normalization in

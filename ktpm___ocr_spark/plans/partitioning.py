@@ -4,18 +4,13 @@ The skew source is mega-documents: one doc per ~1000 has ~10⁴ spans (the
 reference's 50 MB single-upload analogue, ``backend/server.js:133-141``).
 Where it bites and what we do:
 
-* **Narrow plan** (extract_narrow): a document never leaves its row, so
-  a mega-doc is bounded, in-row work — no shuffle, no skew. This is why
-  the narrow plan is the default at 100 TB.
-* **Exploded plan re-stitch**: ``groupBy(doc_id).collect_list`` puts all
-  of a mega-doc's spans in one reducer. Two mitigations:
-  - AQE skew handling (enabled in session.py) rebalances post-shuffle
-    partitions;
-  - ``salted_restitch`` — two-phase aggregation: partial collect per
-    (doc_id, salt) bucket, then merge + one final in-row sort. Bounds
-    any single reducer's input to |spans|/salt_buckets.
+* **Extraction** (extract_arrow_native, and its JVM spec extract_narrow):
+  a document never leaves its row, so a mega-doc is bounded, in-row work
+  — no shuffle, no hot key.
 * **Scan-side balance**: ``repartition_by_weight`` salts heavy rows so
   hashing doc_id can't put several mega-docs in one task.
+* **Hot-key aggregation**: ``salted_sum_count`` reduces a key that holds
+  most of the input through a salted two-phase partial.
 """
 
 from __future__ import annotations
@@ -42,44 +37,6 @@ def repartition_by_weight(
     out = df.withColumn("_salt", salt)
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     return out.repartition(n, F.col(key), F.col("_salt")).drop("_salt")
-
-
-def salted_restitch(
-    spans_rel: DataFrame,
-    all_doc_ids: DataFrame,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-proof re-stitch: two-phase collect of per-span rows back into
-    ordered span arrays (same contract as pipeline.restitch).
-
-    Phase 1 groups by (doc_id, pmod(offset, B)) — a mega-doc's spans are
-    collected by B reducers in parallel. Phase 2 merges the B partial
-    arrays per doc and performs ONE in-row sort by offset. Output order is
-    salt-independent because order comes from the offset data, not from
-    arrival (W3 invariant).
-    """
-    partial = spans_rel.withColumn(
-        "_salt", F.pmod(F.col("offset"), F.lit(salt_buckets))
-    ).groupBy("doc_id", "_salt").agg(
-        F.collect_list(F.struct("offset", "kind", "text", "media_ref")).alias("part")
-    )
-    merged = partial.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.flatten(F.collect_list("part"))),
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
-        ).alias("spans")
-    )
-    from ktpm___ocr_spark.corpus import DOCUMENTS_SCHEMA
-
-    empty = F.array().cast(DOCUMENTS_SCHEMA["spans"].dataType)
-    return all_doc_ids.join(merged, "doc_id", "left").select(
-        "doc_id", F.coalesce("spans", empty).alias("spans")
-    )
 
 
 def salted_sum_count(

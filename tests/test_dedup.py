@@ -10,6 +10,7 @@ from ktpm___ocr_spark.operators.dedup import (
     exact_dup_groups,
     hamming_bitstr,
     keep_canonical,
+    lsh_bands,
     minhash_near_dups,
     minhash_signature,
     ngram_jaccard,
@@ -59,6 +60,26 @@ def test_minhash_near_dups_finds_pairs(spark, docs):
     assert pairs[(1, 2)] == 1.0
     assert (1, 3) in pairs and 0.5 <= pairs[(1, 3)] < 1.0
     assert all(a != 4 and b != 4 for a, b in pairs)
+
+
+def test_minhash_near_dups_keeps_pair_at_exact_threshold(spark):
+    """The verify keeps jaccard >= threshold, boundary included: one word
+    of six edited leaves 3 shared of 5 distinct 3-shingles, J = 0.6."""
+    df = spark.createDataFrame(
+        [
+            (1, "red green blue cyan magenta yellow"),
+            (2, "red green blue cyan magenta black"),
+        ],
+        "id bigint, text string",
+    )
+    bands = {
+        (r["id"], r["band_idx"]): r["band_hash"]
+        for r in lsh_bands(df, "id", "text").collect()
+    }
+    shared = [b for (i, b), h in bands.items() if i == 1 and bands[(2, b)] == h]
+    assert shared, "the pair must be a band candidate for the verify to see it"
+    got = minhash_near_dups(df, "id", "text", threshold=0.6).collect()
+    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in got] == [(1, 2, 0.6)]
 
 
 def test_minhash_banding_recall_on_planted_variants(spark):

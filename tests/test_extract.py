@@ -11,14 +11,13 @@ import pytest
 from ktpm___ocr_spark.corpus import generate_rows, generate_df
 from ktpm___ocr_spark.operators.arrow_native import extract_arrow_native
 from ktpm___ocr_spark.oracle import extract_corpus
-from ktpm___ocr_spark.pipeline import extract_exploded, extract_narrow
+from ktpm___ocr_spark.pipeline import extract_narrow
 
 N_DOCS = 150
 SEED = 42
 
 PATHS = {
     "narrow": extract_narrow,
-    "exploded": extract_exploded,
     "arrow_native": extract_arrow_native,
 }
 
@@ -67,13 +66,11 @@ def test_relabel_mode(spark, corpus_rows, corpus_df, path):
 
 
 def test_narrow_plan_has_no_exchange(spark):
-    """The headline scale property: the default plan is shuffle-free."""
+    """The JVM spec plan is shuffle-free, like the production path
+    (pinned by tests/test_plans.py)."""
     df = generate_df(spark, 20, SEED)  # no repartition — plain scan
     plan = extract_narrow(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-    # and the exploded plan has exactly the one re-stitch/window wide edge
-    plan2 = extract_exploded(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in plan2
 
 
 def test_paths_agree_on_empty_and_degenerate(spark):
@@ -100,6 +97,30 @@ def test_paths_agree_on_empty_and_degenerate(spark):
                     "media_ref": None,
                     "offset": 2,
                 },
+            ],
+        },
+        # \x0B and \x0C are whitespace to Java's \s and the oracle: trimmed
+        # at both ends and word separators inside (16 + 1 words: main text)
+        {
+            "doc_id": "vertical_tab",
+            "spans": [
+                {
+                    "kind": "text",
+                    "text": "\x0b\x0c" + "\x0b".join(["w"] * 16) + "\x0ctail\x0b",
+                    "media_ref": None,
+                    "offset": 1,
+                },
+            ],
+        },
+        # tied offsets keep their input order in the sort and in the
+        # neighbour features of the block-fusion classifier
+        {
+            "doc_id": "tied_offsets",
+            "spans": [
+                {"kind": "text", "text": "z " * 20, "media_ref": None, "offset": 5},
+                {"kind": "text", "text": "a " * 20, "media_ref": None, "offset": 5},
+                {"kind": "media", "text": None, "media_ref": "m:5", "offset": 5},
+                {"kind": "text", "text": "short", "media_ref": None, "offset": 5},
             ],
         },
     ]

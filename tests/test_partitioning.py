@@ -1,5 +1,6 @@
-"""Skew machinery: salted re-stitch equals plain re-stitch equals oracle,
-including the mega-doc; weighted repartition balances heavy rows."""
+"""Skew machinery: both extraction paths equal the oracle on a corpus
+with a mega-doc; weighted repartition balances heavy rows; the salted
+two-phase aggregate is salt-invariant."""
 
 from __future__ import annotations
 
@@ -8,8 +9,9 @@ from pyspark.sql import functions as F
 
 from ktpm___ocr_spark.corpus import generate_df, generate_rows
 from ktpm___ocr_spark.oracle import extract_corpus
-from ktpm___ocr_spark.pipeline import classify_exploded, extract_narrow
-from ktpm___ocr_spark.plans.partitioning import repartition_by_weight, salted_restitch
+from ktpm___ocr_spark.operators.arrow_native import extract_arrow_native
+from ktpm___ocr_spark.pipeline import extract_narrow
+from ktpm___ocr_spark.plans.partitioning import repartition_by_weight
 
 N_DOCS = 1050  # includes the mega-doc at index 1000 (~10⁴ spans)
 SEED = 42
@@ -32,35 +34,37 @@ def test_corpus_contains_mega_doc(skewed_rows):
     assert max(sizes.values()) >= 9000
 
 
-def test_salted_restitch_equals_oracle(spark, skewed_rows, skewed_df):
-    rel = classify_exploded(skewed_df, variant="pdf")
-    rel = rel.filter((F.col("kind") == "media") | F.col("keep")).select(
-        "doc_id", "kind", "text", "media_ref", "offset"
-    )
-    stitched = salted_restitch(rel, skewed_df.select("doc_id"), salt_buckets=16)
-    got = {
-        r["doc_id"]: [
-            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]
-        ]
-        for r in stitched.collect()
+@pytest.fixture(scope="module")
+def mega_extracts(skewed_df):
+    """Each extraction path's output on the mega-doc corpus, by doc_id."""
+    return {
+        extract.__name__: {
+            r["doc_id"]: r["spans"]
+            for r in extract(skewed_df, variant="pdf", boilerplate="drop").collect()
+        }
+        for extract in (extract_narrow, extract_arrow_native)
     }
+
+
+def test_salted_restitch_equals_oracle(skewed_rows, mega_extracts):
+    """Both extraction paths keep the ~10⁴-span mega-doc in its row (no
+    re-stitch, salted or not) and still equal the oracle on it and on the
+    1049 ordinary docs."""
     want = extract_corpus(skewed_rows, variant="pdf", boilerplate="drop")
-    assert got == want
+    for name, spans_by_doc in mega_extracts.items():
+        got = {
+            doc_id: [
+                (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans
+            ]
+            for doc_id, spans in spans_by_doc.items()
+        }
+        assert got == want, name
 
 
-def test_salted_restitch_equals_narrow(spark, skewed_df):
-    want = {
-        r["doc_id"]: r["spans"] for r in extract_narrow(skewed_df).collect()
-    }
-    rel = classify_exploded(skewed_df)
-    rel = rel.filter((F.col("kind") == "media") | F.col("keep")).select(
-        "doc_id", "kind", "text", "media_ref", "offset"
-    )
-    got = {
-        r["doc_id"]: r["spans"]
-        for r in salted_restitch(rel, skewed_df.select("doc_id"), 8).collect()
-    }
-    assert got == want
+def test_salted_restitch_equals_narrow(mega_extracts):
+    """The production path equals the all-JVM spec row for row on the
+    mega-doc corpus, span structs included."""
+    assert mega_extracts["extract_arrow_native"] == mega_extracts["extract_narrow"]
 
 
 def test_repartition_by_weight_spreads_heavy_rows(spark, skewed_df):

@@ -1,5 +1,6 @@
 """Property-based span-sequence equality: randomized documents (hypothesis)
-must extract identically in the oracle and the Spark narrow plan.
+must extract identically in the oracle, the production Arrow path and the
+JVM spec plan.
 
 Exceeds the reference's test strategy (SURVEY §5.1 notes it has no
 property-based tests). One Spark round-trip per example batch keeps this
@@ -12,14 +13,17 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ktpm___ocr_spark.corpus import DOCUMENTS_SCHEMA
+from ktpm___ocr_spark.operators.arrow_native import extract_arrow_native
 from ktpm___ocr_spark.oracle import extract_corpus
 from ktpm___ocr_spark.pipeline import extract_narrow
 
 # text fragments that stress normalization and the classifier — including
 # non-ASCII whitespace (NBSP, LINE SEPARATOR): ASCII-pinned \s must treat
-# these as *content* identically in the oracle and every Spark path
+# these as *content* identically in the oracle and every Spark path — and
+# \x0B / \x0C, which Java's \s and the oracle count as whitespace
 _frag = st.sampled_from(
-    ["", " ", "\r\n", "\r", "\n\n", "\n\n\n", "\t", "word", "the quick fox",
+    ["", " ", "\r\n", "\r", "\n\n", "\n\n\n", "\t", "\x0b", "\x0c", "word",
+     "the quick fox",
      '<a href="/x">x</a>', "a b c d e f g h i j k l m n o p q r", "x" * 200,
      " ", " nbsp ", " ", "li ne", "é ü 汉字"]
 )
@@ -40,9 +44,8 @@ _span = st.one_of(
 @st.composite
 def _doc(draw, idx: int = 0):
     spans = draw(st.lists(_span, min_size=0, max_size=12))
-    offsets = draw(
-        st.permutations(list(range(1, len(spans) + 1))) if spans else st.just([])
-    )
+    # drawn with replacement from a small range, so offsets tie
+    offsets = draw(st.lists(st.integers(1, 6), min_size=len(spans), max_size=len(spans)))
     return {
         "doc_id": f"h{draw(st.integers(0, 10**9))}_{len(spans)}",
         "spans": [
@@ -59,14 +62,16 @@ def _doc(draw, idx: int = 0):
 @given(st.lists(_doc(), min_size=1, max_size=8, unique_by=lambda d: d["doc_id"]))
 def test_random_docs_extract_equal(spark, docs):
     df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
-    got = {
-        r["doc_id"]: [
-            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]
-        ]
-        for r in extract_narrow(df).collect()
-    }
     want = extract_corpus(docs)
-    assert got == want
+    for extract in (extract_arrow_native, extract_narrow):
+        got = {
+            r["doc_id"]: [
+                (s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in r["spans"]
+            ]
+            for r in extract(df).collect()
+        }
+        assert got == want, extract.__name__
 
 
 from ktpm___ocr_spark.functions.chunking import chunk_array, restitch_array  # noqa: E402

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from ktpm___ocr_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_dups,
+    hyperplanes,
+    lsh_bucket,
     lsh_topk,
 )
 
@@ -82,6 +84,22 @@ def test_embedding_near_dups_finds_planted_pair(spark, emb):
     pairs = {(r["id_a"], r["id_b"]): r["cos"] for r in got}
     assert (row["vec_id"], 999999) in pairs
     assert pairs[(row["vec_id"], 999999)] == 1.0
+
+
+def test_embedding_near_dups_keeps_pair_at_exact_threshold(spark):
+    """cos((3,4), (4,3)) = 24/25 = 0.96 exactly: at threshold 0.96 the
+    pair is kept (>=, boundary included) once both share a bucket."""
+    df = spark.createDataFrame(
+        [(1, [3.0, 4.0]), (2, [4.0, 3.0])], "vec_id bigint, embedding array<double>"
+    )
+    buckets = {
+        r["bucket"]
+        for r in df.select(lsh_bucket(F.col("embedding"), hyperplanes(2)).alias("bucket"))
+        .collect()
+    }
+    assert len(buckets) == 1, buckets
+    got = embedding_near_dups(df, threshold=0.96, dim=2).collect()
+    assert [(r["id_a"], r["id_b"], r["cos"]) for r in got] == [(1, 2, 0.96)]
 
 
 def test_quantize_int8_roundtrip_bound(spark):
