@@ -114,16 +114,25 @@ def _spans_canon(col) -> F.Column:
 # ---- DuckDB mirrors of the above (shared CTE text, used by the flagship
 # oracle and the end-to-end convert oracle). Internal struct keys are
 # (k, tx, mr, o); only final output column names must match Spark.
+# Whitespace is textnorm._WS_CHARS on every engine: Java's \s and the
+# Python oracles (re.ASCII) include \x0B, RE2's \s does not, so every
+# DuckDB whitespace regex spells the class out.
+_SQL_WS = "[" + "".join(f"\\x{ord(c):02x}" for c in textnorm._WS_CHARS) + "]"
+_SQL_NWS = "[^" + _SQL_WS[1:]
 _PDFNORM = (
     "regexp_replace(regexp_replace(regexp_replace({e},"
     " '\\r\\n?', chr(10), 'g'),"
     " '\\n{{2,}}', chr(10)||chr(10), 'g'),"
-    " '^\\s+|\\s+$', '', 'g')"
+    f" '^{_SQL_WS}+|{_SQL_WS}+$', '', 'g')"
 )
-_WC = "coalesce(len(regexp_extract_all({e}, '\\S+')), 0)"
+_WC = f"coalesce(len(regexp_extract_all({{e}}, '{_SQL_NWS}+')), 0)"
 _LWC = (
     "coalesce(list_sum(list_transform(regexp_extract_all({e}, '<a[^>]*>(.*?)</a>', 1),"
-    " m -> len(regexp_extract_all(m, '\\S+')))), 0)"
+    f" m -> len(regexp_extract_all(m, '{_SQL_NWS}+')))), 0)"
+)
+_WORDS = (
+    "list_filter(string_split_regex(lower(coalesce({e}, '')), "
+    f"'{_SQL_WS}+'), w -> w <> '')"
 )
 
 # raw → sp (synthesized spans) → srt (offset-sorted) → nrm (normalized)
@@ -1292,6 +1301,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ),
         )
         r = render_documents(d, text_col="text", title_col="title", fmt="docx")
+        r = r.select("doc_id", "output", "mime", "filename")
         return docx_document_xml(r).select(
             "doc_id",
             F.sha2(F.col("document_xml"), 256).alias("xml_sha"),
@@ -1333,13 +1343,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("original_name"),
             F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id") * 60).alias("ts"),
         )
-        rendered = render_documents(
-            prepared.select("doc_id", "text"), text_col="text", fmt="txt"
-        ).select("doc_id", "output", "mime")
-        joined = prepared.drop("text").join(rendered, "doc_id").withColumn(
-            "filename", F.concat(F.lit("doc-"), F.col("doc_id"), F.lit(".txt"))
+        rendered = (
+            render_documents(prepared, text_col="text", fmt="txt")
+            .drop("text")
+            .withColumn(
+                "filename", F.concat(F.lit("doc-"), F.col("doc_id"), F.lit(".txt"))
+            )
         )
-        return win.history_items(joined, retention=10)
+        return win.history_items(rendered, retention=10)
 
     q["s7_history_items"] = s7_history
 
@@ -1894,7 +1905,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # registered: the driver does not accept rows-only entries, and their
     # portable/parquet-derived twins `hll_distinct_users` and
     # `convert_pipeline_docs` are driver-green.  convert_batch on the
-    # generator corpus stays covered by tests/test_document_pipeline.py.
+    # generator corpus stays covered by tests/test_render_pipeline.py.
 
     def convert_docs(spark, sf):
         """End-to-end convert pipeline (J5 dedup → P4 extraction → C1-C3
@@ -2988,7 +2999,7 @@ def oracle_sql() -> dict[str, str]:
         "regexp_replace(regexp_replace(regexp_replace(text,"
         " '\\r\\n?', chr(10), 'g'),"
         " '\\n{2,}', chr(10)||chr(10), 'g'),"
-        " '^\\s+|\\s+$', '', 'g')"
+        f" '^{_SQL_WS}+|{_SQL_WS}+$', '', 'g')"
     )
     _txt_norm = _pdf_norm.replace("'\\n{2,}'", "'\\n{3,}'")
     o["p5_normalize_pdf"] = f"SELECT doc_id, {_pdf_norm} AS norm_text FROM documents"
@@ -3236,16 +3247,7 @@ def oracle_sql() -> dict[str, str]:
     )
 
     # ---- text analysis (shared formulations; see textstats.py) ----
-    # Corpus contract for every \s/\S-based oracle below: Java regex
-    # counts vertical tab \x0B as \s, RE2 (DuckDB) does not — a document
-    # containing \x0B would tokenize differently in the two engines. The
-    # test corpus generator never emits \x0B (asserted in
-    # tests/test_entry.py); a corpus that can would need the explicit
-    # class [ \t\n\x0b\f\r] on both sides.
-    _words = (
-        "list_filter(string_split_regex(lower(coalesce(text, '')), '\\s+'), "
-        "w -> w <> '')"
-    )
+    _words = _WORDS.format(e="text")
     _stop = "['" + "','".join(textstats.EN_STOPWORDS) + "']"
     _stop_ratio = (
         f"CASE WHEN len({_words}) = 0 THEN 0.0 ELSE "
@@ -3253,7 +3255,7 @@ def oracle_sql() -> dict[str, str]:
         f"DOUBLE) / len({_words}) END"
     )
     o["text_tokens"] = (
-        "SELECT doc_id, CAST(coalesce(len(regexp_extract_all(text, '\\S+')), 0) "
+        f"SELECT doc_id, CAST(coalesce(len(regexp_extract_all(text, '{_SQL_NWS}+')), 0) "
         "AS BIGINT) AS tok_ws, CAST(coalesce(len(regexp_extract_all(text, "
         f"'{textstats.BPE_TOKEN_RE}')), 0) AS BIGINT) AS tok_bpe FROM documents"
     )
@@ -3529,7 +3531,7 @@ def oracle_sql() -> dict[str, str]:
     o["token_budget"] = (
         "SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE "
         "'test' END AS split, lang, CAST(sum(CAST(coalesce(len("
-        "regexp_extract_all(text, '\\S+')), 0) AS BIGINT)) AS BIGINT) AS "
+        f"regexp_extract_all(text, '{_SQL_NWS}+')), 0) AS BIGINT)) AS BIGINT) AS "
         "tokens_ws, count(*) AS n_docs FROM (SELECT lang, text, "
         "CAST(('0x' || substr(sha256(CAST(doc_id AS VARCHAR)), 1, 15)) AS "
         "BIGINT) % 100 AS b FROM documents) GROUP BY 1, 2"
@@ -4927,7 +4929,7 @@ WHERE rn <= 5
     # overflow-safe decomposition as textstats.mixture_plan.
     o["mixture_plan"] = (
         "WITH t AS (SELECT source AS domain, CAST(sum(CAST(coalesce(len("
-        "regexp_extract_all(text, '\\S+')), 0) AS BIGINT)) AS BIGINT) AS "
+        f"regexp_extract_all(text, '{_SQL_NWS}+')), 0) AS BIGINT)) AS BIGINT) AS "
         "tokens FROM documents GROUP BY 1), "
         "nd AS (SELECT CAST(count(*) AS BIGINT) AS _nd FROM t), "
         "p AS (SELECT domain, tokens, CAST(CAST(1000000 AS BIGINT) // _nd "
@@ -4943,7 +4945,7 @@ WHERE rn <= 5
 
     o["mixture_plan_weighted"] = (
         "WITH t AS (SELECT source AS domain, CAST(sum(CAST(coalesce(len("
-        "regexp_extract_all(text, '\\S+')), 0) AS BIGINT)) AS BIGINT) AS "
+        f"regexp_extract_all(text, '{_SQL_NWS}+')), 0) AS BIGINT)) AS BIGINT) AS "
         "tokens FROM documents GROUP BY 1), "
         "w AS (SELECT domain, tokens, CAST(CAST(('0x' || substr(sha256("
         "domain), 1, 15)) AS BIGINT) % 4 + 1 AS BIGINT) AS weight FROM t), "
@@ -4977,7 +4979,7 @@ WHERE rn <= 5
     )
     o["kmv_rank_sketch"] = (
         "WITH s AS (SELECT CAST(coalesce(len(regexp_extract_all(text, "
-        "'\\S+')), 0) AS BIGINT) AS v FROM documents "
+        f"'{_SQL_NWS}+')), 0) AS BIGINT) AS v FROM documents "
         "ORDER BY sha256(CAST(doc_id AS VARCHAR)) LIMIT 256), "
         "a AS (SELECT list_sort(list(v)) AS vs, CAST(count(*) AS BIGINT) "
         "AS n FROM s), "
@@ -4991,7 +4993,7 @@ WHERE rn <= 5
     # \s+ word split, and integer cross-multiplied 3/25 stopword
     # threshold as textstats.code_switch_stats; dominant language via
     # the same fixed lexicographic CASE order (en < und < unk).
-    _cs_words = "list_filter(string_split_regex(x, '\\s+'), w -> w <> '')"
+    _cs_words = f"list_filter(string_split_regex(x, '{_SQL_WS}+'), w -> w <> '')"
     o["code_switch_lines"] = (
         "WITH l AS (SELECT doc_id, list_filter(list_transform("
         "string_split(lower(coalesce(text, '')), chr(10)), x -> trim(x)), "
@@ -5026,7 +5028,7 @@ WHERE rn <= 5
     # exactly the same bottom-64 set by the min-k lattice.
     o["kmv_grouped_domains"] = (
         "WITH b AS (SELECT source AS g, sha256(CAST(doc_id AS VARCHAR)) "
-        "AS h, CAST(coalesce(len(regexp_extract_all(text, '\\S+')), 0) AS "
+        f"AS h, CAST(coalesce(len(regexp_extract_all(text, '{_SQL_NWS}+')), 0) AS "
         "BIGINT) AS v FROM documents), "
         "r AS (SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY h) "
         "AS rn FROM b), "

@@ -10,8 +10,7 @@ composite key with early exit (J5, ``cacheFilter.js:6-42`` +
 Spark-first re-expression:
 
 * a cache layer is a table ``(key…, value…)``; the probe is a LEFT JOIN
-  (broadcast when the cache is small — Catalyst decides via AQE, we hint
-  when we know);
+  against the broadcast cache;
 * compute-on-miss runs only on the null side of the join, then the two
   legs are unioned — the physical analogue of the reference's per-row
   ``if (cached) … else compute``;
@@ -42,8 +41,6 @@ def memo_join(
     value_cols: list[str],
     compute: Compute,
     stage: str,
-    broadcast_cache: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Lookup-or-compute one stage against a cache table.
 
@@ -54,12 +51,9 @@ def memo_join(
     ``ocrFilter.js:35-40``): a cache row whose value columns are all NULL
     counts as a miss.
 
-    With ``materialize=True`` (default) the union is eagerly checkpointed
-    and the persisted probe join is released before returning, so the
-    operator leaves no cached blocks behind in long-lived sessions. Pass
-    ``materialize=False`` to keep the result fully lazy (e.g. when chaining
-    several memo stages into one plan) — the caller then owns reclaiming
-    the probe relation via ``spark.catalog.clearCache()``.
+    The cache side is broadcast. The union is eagerly checkpointed and the
+    persisted probe join released before returning, so the operator leaves
+    no cached blocks behind in long-lived sessions.
     """
     from functools import reduce
     from operator import or_
@@ -67,9 +61,7 @@ def memo_join(
     has_value = reduce(or_, [F.col(v).isNotNull() for v in value_cols])
     # A cache hit must have at least one non-null value column (corrupt
     # payloads — all-NULL values — are treated as misses).
-    c = cache.filter(has_value)
-    if broadcast_cache:
-        c = F.broadcast(c)
+    c = F.broadcast(cache.filter(has_value))
     # persist so the probe join executes ONCE: hits, misses, and the
     # compute-over-misses leg all read the cached join output instead of
     # re-evaluating it (2–3×).
@@ -80,13 +72,9 @@ def memo_join(
         )
         misses = probed.filter(~has_value).drop(*value_cols)
         computed = compute(misses).withColumn(f"{stage}_from_cache", F.lit(False))
-        out = hits.unionByName(computed)
-        if materialize:
-            return out.localCheckpoint(eager=True)
-        return out
+        return hits.unionByName(computed).localCheckpoint(eager=True)
     finally:
-        if materialize:
-            probed.unpersist()
+        probed.unpersist()
 
 
 def dedup_compute_once(

@@ -18,6 +18,10 @@ Reference behavior being reproduced (semantics, not libraries):
 All three run as Arrow-batched ``mapInPandas`` (binary-producing stages
 are the pattern the reference's render filters map to — SURVEY §2.1
 S4-S6); format dispatch (P10) picks the renderer per row.
+``render_documents`` passes its input through: every input column comes
+back unchanged, followed by ``output``, ``mime`` and ``filename``, so a
+pipeline renders in place rather than joining a re-keyed table back on
+its id.
 """
 
 from __future__ import annotations
@@ -37,14 +41,12 @@ TITLE_PT = 18  # pdf.js: title 18pt centered underlined
 BODY_PT = 13  # pdf.js: body 13pt
 PAGE_W, PAGE_H = 595, 842  # A4 points
 
-RENDER_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("output", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("filename", T.StringType()),
-    ]
-)
+# appended after the input's own columns, which pass through unchanged
+RENDER_FIELDS = [
+    T.StructField("output", T.BinaryType()),
+    T.StructField("mime", T.StringType()),
+    T.StructField("filename", T.StringType()),
+]
 
 MIMES = {
     "pdf": "application/pdf",
@@ -156,35 +158,36 @@ _RENDERERS = {"pdf": render_pdf_py, "docx": render_docx_py, "txt": render_txt_py
 
 def render_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     title_col: str | None = None,
     fmt_col: str | None = None,
     fmt: str = "pdf",
 ) -> DataFrame:
     """S4–S6 + P10: render each row's text to a binary buffer in its
-    format, emitting (doc_id, output, mime, filename). Arrow-batched."""
+    format. Returns every input column unchanged (names, types, order),
+    followed by ``output``, ``mime`` and ``filename`` — the renderer
+    applied in place, so callers chain on it instead of joining it back.
+    Raises ``ValueError`` if the input already has one of those three
+    columns. Arrow-batched."""
+    clash = [f.name for f in RENDER_FIELDS if f.name in df.columns]
+    if clash:
+        raise ValueError(f"render_documents input already has {clash}")
 
     def process(batches: Iterator) -> Iterator:
-        import pandas as pd
-
         for pdf in batches:
-            ids, outs, mimes, names = [], [], [], []
+            outs, mimes, names = [], [], []
             titles = pdf[title_col] if title_col else None
             fmts = pdf[fmt_col] if fmt_col else None
             for i in range(len(pdf)):
                 f = (fmts.iloc[i] if fmts is not None else fmt) or "pdf"
                 f = f if f in _RENDERERS else "pdf"  # P10: else-branch → pdf
                 title = (titles.iloc[i] if titles is not None else None) or "Document"
-                ids.append(str(pdf[id_col].iloc[i]))
                 outs.append(_RENDERERS[f](pdf[text_col].iloc[i], title))
                 mimes.append(MIMES[f])
                 names.append(f"{title}.{f}")
-            yield pd.DataFrame(
-                {"doc_id": ids, "output": outs, "mime": mimes, "filename": names}
-            )
+            yield pdf.assign(output=outs, mime=mimes, filename=names)
 
-    return df.mapInPandas(process, schema=RENDER_SCHEMA)
+    return df.mapInPandas(process, schema=T.StructType(df.schema.fields + RENDER_FIELDS))
 
 
 DOCX_XML_SCHEMA = T.StructType(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import io
 import zipfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from ktpm___ocr_spark.corpus import generate_df, generate_rows
@@ -46,24 +47,35 @@ def test_txt_uses_txt_collapse_variant():
 
 
 def test_render_documents_dispatch(spark):
+    """Dispatch per row (P10), and every input column passes through with
+    its type unchanged — a bigint doc_id and a nested extra column."""
     df = spark.createDataFrame(
-        [("1", "hello", "A", "pdf"), ("2", "hi", "B", "docx"),
-         ("3", "yo", "C", "txt"), ("4", "zz", "D", "weird")],
-        "doc_id string, text string, title string, fmt string",
+        [(1, "hello", "A", "pdf", [("k", 1)]), (2, "hi", "B", "docx", None),
+         (3, "yo", "C", "txt", []), (4, "zz", "D", "weird", [("z", 9)])],
+        "doc_id bigint, text string, title string, fmt string, "
+        "extra array<struct<k:string,v:int>>",
     )
-    got = {
-        r["doc_id"]: r
-        for r in render_documents(
-            df, text_col="text", title_col="title", fmt_col="fmt"
-        ).collect()
-    }
-    assert got["1"]["mime"] == "application/pdf"
-    assert got["1"]["filename"] == "A.pdf"
-    assert bytes(got["1"]["output"]).startswith(b"%PDF")
-    assert got["2"]["filename"] == "B.docx"
-    assert bytes(got["2"]["output"]).startswith(b"PK")  # zip magic
-    assert bytes(got["3"]["output"]) == b"yo"
-    assert got["4"]["mime"] == "application/pdf"  # P10 else-branch → pdf
+    rendered = render_documents(df, text_col="text", title_col="title", fmt_col="fmt")
+    assert rendered.schema.fields[: len(df.columns)] == df.schema.fields
+    assert rendered.columns[len(df.columns):] == ["output", "mime", "filename"]
+    got = {r["doc_id"]: r for r in rendered.collect()}
+    assert [tuple(got[i])[:5] for i in (1, 2, 3, 4)] == [tuple(r) for r in df.collect()]
+    assert got[1]["mime"] == "application/pdf"
+    assert got[1]["filename"] == "A.pdf"
+    assert bytes(got[1]["output"]).startswith(b"%PDF")
+    assert got[2]["filename"] == "B.docx"
+    assert bytes(got[2]["output"]).startswith(b"PK")  # zip magic
+    assert bytes(got[3]["output"]) == b"yo"
+    assert got[4]["mime"] == "application/pdf"  # P10 else-branch → pdf
+
+
+@pytest.mark.parametrize("taken", ["output", "mime", "filename"])
+def test_render_documents_rejects_input_with_output_names(spark, taken):
+    df = spark.createDataFrame(
+        [("1", "x", "y")], f"doc_id string, text string, {taken} string"
+    )
+    with pytest.raises(ValueError, match=taken):
+        render_documents(df)
 
 
 def test_convert_batch_end_to_end(spark):
@@ -71,6 +83,13 @@ def test_convert_batch_end_to_end(spark):
     docs = generate_df(spark, 60, seed=42)  # includes ~6 duplicate docs
     results, stats = convert_batch(docs, target_lang="vie", output_format="pdf")
     out = results.collect()
+    # one pass: extraction and render run once per distinct document, and
+    # one window over the e2e key serves the dedup (one per scan of docs)
+    plan = results._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # AQE prints both after a run
+    assert plan.count("MapInArrow ") == 1, plan
+    assert plan.count("MapInPandas ") == 1, plan
+    assert plan.count("Window [") <= 2, plan
     assert len(out) == len(rows)
     by_id = {r["doc_id"]: r for r in out}
     # every doc has rendered output with the right mime + stable keys
