@@ -16,7 +16,9 @@ Spark-first re-expression:
   ``if (cached) … else compute``;
 * within-run request dedup (J5) = compute once per DISTINCT key and join
   results back to every duplicate row — exactly a 100 %-hit cache for
-  repeated content, with zero external state.
+  repeated content, with zero external state. It is composed in place by
+  ``document_pipeline.convert_batch`` (one window names each key's
+  representative), not an operator here.
 
 Every operator emits ``<stage>_from_cache`` lineage flags mirroring the
 reference's provenance booleans (``fromCache``, ``ocrFromCache``, … —
@@ -75,26 +77,6 @@ def memo_join(
         return hits.unionByName(computed).localCheckpoint(eager=True)
     finally:
         probed.unpersist()
-
-
-def dedup_compute_once(
-    df: DataFrame,
-    key_col: str,
-    compute: Compute,
-    payload_cols: list[str] | None = None,
-) -> DataFrame:
-    """J5: compute once per distinct content key, join back to all rows.
-
-    ``compute`` receives one representative row per distinct key (key +
-    ``payload_cols``) and returns it with result columns added. All
-    duplicate rows receive the representative's result — the semantics of
-    a same-run 100 %-hit cache. The join back is on the key only, so the
-    expensive stage runs |distinct keys| times, not |rows| times.
-    """
-    payload_cols = payload_cols or []
-    reps = df.select(key_col, *payload_cols).dropDuplicates([key_col])
-    computed = compute(reps).drop(*payload_cols)
-    return df.join(computed, on=key_col, how="left")
 
 
 def refresh_cache(

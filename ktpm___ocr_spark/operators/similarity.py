@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two strategies:
+Three strategies:
 
 * ``brute_force_topk`` — exact cosine top-k: broadcast the (small) query
   set against the corpus, rank per query. The baseline; exact, one
@@ -11,6 +11,11 @@ Two strategies:
   bucket collisions (with optional multi-probe on Hamming-1 buckets);
   exact cosine re-rank within candidates. The 100 TB path: the corpus is
   scanned once to bucket, then joins are equi-joins on small bucket keys.
+* ``embedding_near_dups`` — all-pairs near-dup detection with the same
+  sign-LSH buckets: one exchange on the bucket, then an exact in-bucket
+  Gram verify in one Python call per bucket
+  (``text_kernels.cosine_bucket_pairs_arrow``), so no pair relation is
+  ever materialized and each vector crosses into Python once.
 
 All arithmetic in float64 with explicit fold order (``zip_with`` +
 ``aggregate``) so results are deterministic and reproducible in the
@@ -210,45 +215,32 @@ def embedding_near_dups(
     dim: int,
     round_dp: int = 5,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs via LSH bucketing + exact verify.
-
-    Self-join restricted to same-bucket pairs (near-identical vectors
-    collide with high probability at 8 planes), cosine ≥ threshold.
+    """Embedding-cosine near-dup pairs ``(id_a, id_b, cos)`` via LSH
+    bucketing + exact verify: every pair of vectors sharing a sign-LSH
+    bucket (near-identical vectors collide with high probability at 8
+    planes) with ``id_a < id_b`` and ``round(cosine, round_dp) >=
+    threshold``.
     ``dim`` is REQUIRED (keyword-only): a first-row probe during plan
     construction would be a hidden driver-side action.
 
-    Candidates are verified by the ``cosine_pairs_arrow`` kernel
-    (vectorized sequential-fold cosine + exact HALF_UP boundary) —
-    bit-identical to ``round(cosine(a, b), round_dp) >= threshold``,
-    pinned by tests/test_text_kernels.py. The bucket join stays the one
-    shuffle and the verify is a projection over the candidate relation.
+    The verify is ``text_kernels.cosine_bucket_pairs_arrow``: one
+    exchange on the bucket, then each bucket's vectors go to Python once
+    and its Gram block is computed with the Catalyst fold order and the
+    exact HALF_UP boundary. It is bit-identical to the bucket self-join →
+    ``round(cosine(a, b), round_dp) >= threshold`` composition, which
+    tests/test_text_kernels.py keeps as the spec. The verify runs at most
+    ``spark.sql.shuffle.partitions`` Python tasks (fewer once AQE
+    coalesces a small shuffle), whatever the input's partitioning.
     """
-    from ktpm___ocr_spark.operators.text_kernels import cosine_pairs_arrow
+    from ktpm___ocr_spark.operators.text_kernels import cosine_bucket_pairs_arrow
 
     planes = hyperplanes(dim, n_planes, seed)
     b = df.select(
         F.col(id_col),
-        F.col(vec_col),
+        _to_double(F.col(vec_col)).alias(vec_col),
         lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
-    l, r = b.alias("l"), b.alias("r")
-    cand = l.join(
-        r,
-        (F.col("l.bucket") == F.col("r.bucket"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    )
-    return cosine_pairs_arrow(
-        cand.select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            _to_double(F.col(f"l.{vec_col}")).alias("_va"),
-            _to_double(F.col(f"r.{vec_col}")).alias("_vb"),
-        ),
-        "_va",
-        "_vb",
-        threshold=threshold,
-        round_dp=round_dp,
-    )
+    return cosine_bucket_pairs_arrow(b, id_col, vec_col, threshold, round_dp)
 
 
 # ------------------------------------------------------- int8 quantization

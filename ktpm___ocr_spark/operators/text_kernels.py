@@ -28,6 +28,20 @@ HALF_UP ``round(_, 4)`` boundary semantics. Equivalence is pinned by
 tests/test_text_kernels.py (fixture corpus + adversarial boundary
 rows), not by claim.
 
+Every Python task pays a fixed start cost, whatever it computes. On a
+4-vCPU host with Python 3.11.7 a no-op ``mapInArrow`` over 32 partitions
+took 1.65–3.8 s against 0.30–0.35 s over 4. The cost sits in
+``pyspark.worker_util.setup_spark_files``, which calls
+``importlib.invalidate_caches()``: that re-reads the zip directory of
+every ``zipimporter`` on the worker's path (``pyspark.zip``, its
+subpackages, the spark-core jar), 0.12–0.29 s per call measured inside
+the worker. So a Python stage must not inherit an upstream ``8 × nproc``
+partitioning: a ``mapInArrow`` runs as many tasks as its input has
+partitions, so kernels that follow a shuffle either sit behind their own
+exchange (``cosine_bucket_pairs_arrow`` groups by bucket, so it runs
+``spark.sql.shuffle.partitions`` tasks or fewer after AQE coalescing) or
+run over an input sized by the caller.
+
 Reference anchor: the content-hash dedup family is the reference's core
 value (``backend/filters/cacheFilter.js:8-13``); the quality gate
 extends its per-document text stage (``backend/filters/ocrFilter.js``).
@@ -56,7 +70,7 @@ __all__ = [
     "gopher_gate_arrow",
     "hashed_bow_embedding_arrow",
     "shingle_metrics_arrow",
-    "cosine_pairs_arrow",
+    "cosine_bucket_pairs_arrow",
 ]
 
 # Java regex \s (Pattern.split in Spark's `split`) is the ASCII set
@@ -549,157 +563,178 @@ def _shingle_set(text: str | None, n: int = _SHINGLE_N) -> set:
     return {b.decode("utf-8") for b in _shingle_bytes(_words(text), n)}
 
 
-def cosine_pairs_arrow(
+# Rows per Gram tile: a 256 x 256 float64 accumulator is 512 KiB, which
+# stays cache-resident while the dim-step fold sweeps it.
+_GRAM_TILE = 256
+
+
+def cosine_bucket_pairs_arrow(
     df: DataFrame,
-    vec_a: str = "_va",
-    vec_b: str = "_vb",
-    threshold: float = 0.95,
+    id_col: str,
+    vec_col: str,
+    threshold: float,
     round_dp: int = 5,
-    out_col: str = "cos",
 ) -> DataFrame:
-    """Candidate-pair cosine verification kernel: for each row, compute
-    ``round(cosine(vec_a, vec_b), round_dp)`` and KEEP the row iff it is
-    ``>= threshold`` — bit-identical to the expression form
-    ``F.round(similarity.cosine(a, b), dp) >= threshold`` (sequential-
-    fold dot/norms, zero denominator → 0.0, Spark HALF_UP round).
+    """Bucket-blocked cosine verify: ``(id_a, id_b, cos)`` for every pair
+    of rows sharing ``df.bucket`` with ``id_a < id_b`` and
+    ``round(cosine(a, b), round_dp) >= threshold`` — bit-identical to the
+    bucket self-join → ``F.round(similarity.cosine(a, b), dp)`` filter
+    (sequential-fold dot/norms, zero denominator → 0.0, Spark HALF_UP
+    round), which survives as the test-local spec.
 
-    Bit-identity is engineered, not hoped for:
+    ``df.groupBy("bucket").applyInArrow`` hands each bucket to Python
+    once, so each vector crosses the JVM→Python boundary once (a pair
+    relation ships a vector of a size-b bucket b−1 times) and the stage
+    runs at most ``spark.sql.shuffle.partitions`` Python tasks instead of
+    inheriting an upstream partitioning (module docstring: every Python
+    task pays a fixed start cost). Inside one bucket:
 
-    * the dot product and both norms are evaluated as ``dim`` vectorized
-      numpy steps ``acc = acc + A[:, i] * B[:, i]`` — the SAME
-      left-to-right float64 fold order as the Catalyst
-      ``aggregate(zip_with(a, b, *), 0.0, +)`` (numpy ``dot`` would use
-      pairwise/SIMD summation and drift ULPs on the fold);
-    * the threshold test uses the exact HALF_UP boundary transform
-      (see the module's round-boundary derivation):
-      ``roundN(d) >= T  ⟺  d >= float64(T - 10^-N/2)`` for a ≤N-digit
-      decimal T, so NO per-row Decimal in the hot path;
-    * only the (few) survivors get the exact ``Decimal(repr(d))``
-      HALF_UP value for the output column.
+    * rows with a null id, a null vector or a null element are dropped —
+      the spec's cosine is null for them, or its id comparison is;
+    * rows are sorted by id and given a dense id rank, so ``id_a < id_b``
+      is a rank comparison and equal ids never pair;
+    * per vector length, each norm is the sequential fold
+      ``sqrt(((0 + x0·x0) + x1·x1) + ...)`` computed once, and the Gram
+      block is filled ``_GRAM_TILE`` rows at a time as
+      ``acc = acc + outer(A[:, k], B[:, k])`` for k = 0…dim−1 — per pair
+      the SAME left-to-right float64 fold as Catalyst's
+      ``aggregate(zip_with(a, b, *), 0.0, +)`` (a BLAS matmul would sum
+      pairwise and drift ULPs);
+    * the threshold test is the exact HALF_UP boundary transform
+      ``roundN(d) >= T  ⟺  d >= float64(T - 10^-N/2)`` (see the module's
+      round-boundary derivation); only survivors get the exact
+      ``Decimal(repr(d))`` HALF_UP value.
 
-    Non-vector columns pass through unchanged; the vector columns are
-    dropped. Scale shape: pure projection over the already-joined
-    candidate relation — the bucket join that built it stays the one
-    shuffle (same contract as ``shingle_metrics_arrow``).
+    Corners follow Spark exactly. Spark orders NaN above every double, so
+    a NaN cosine passes ``>= T`` and is KEPT with ``cos = NaN``; Spark's
+    ``round`` returns NaN/±Infinity unchanged. Vectors of different
+    lengths have a null dot (``zip_with`` null-pads), but the spec's
+    ``when(norm_a · norm_b == 0, 0.0)`` fires first, so such a pair is
+    kept with ``cos = 0.0`` iff its norm product is zero and
+    ``0.0 >= T``.
 
-    Non-finite inputs follow Spark's comparison semantics exactly (so
-    bit-identity holds even off the finite-vector happy path): Spark
-    orders NaN greater than every double, so a NaN cosine satisfies
-    ``>= threshold`` and the row is KEPT with ``cos = NaN``; Spark's
-    ``round`` returns NaN/±Infinity unchanged, so non-finite survivors
-    skip the HALF_UP quantize; ``-Infinity`` fails the test and is
-    dropped on both paths.
+    Scale shape: one exchange on the bucket; a hot bucket is one
+    task (its pairs are quadratic on every formulation).
     """
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
     from pyspark.sql.types import DoubleType
 
-    passthrough = [c for c in df.columns if c not in (vec_a, vec_b)]
+    id_type = df.schema[id_col].dataType
     out_schema = StructType(
-        [StructField(c, df.schema[c].dataType) for c in passthrough]
-        + [StructField(out_col, DoubleType())]
+        [
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("cos", DoubleType()),
+        ]
     )
-    src = df.select(*passthrough, vec_a, vec_b)
-    n_pass = len(passthrough)
     quantum = Decimal(1).scaleb(-round_dp)
     # exact float64 image of the decimal boundary T - 10^-N/2 (repr(T)
     # re-derives the shortest decimal the Spark-side literal carries)
     boundary = float(Decimal(repr(float(threshold))) - quantum / 2)
+    zero_passes = 0.0 >= boundary
 
     def round_dp_exact(d: float) -> float:
         if not math.isfinite(d):
             return d  # Spark Round passes NaN/±Inf through unchanged
-        return float(Decimal(repr(d)).quantize(quantum, rounding=ROUND_HALF_UP))
+        q = Decimal(repr(d)).quantize(quantum, rounding=ROUND_HALF_UP)
+        return float(q) + 0.0  # BigDecimal has no -0: Spark rounds -1e-9 to 0.0
 
-    def _mat(col, n_rows):
-        """list<float64> column → (rows, dim) float64 matrix, or None if
-        ragged/null (fallback row loop replicates expression semantics)."""
-        import numpy as np
-        import pyarrow as pa
+    def tiles(n):
+        """(rows, cols) slice pairs covering the upper block triangle."""
+        for i0 in range(0, n, _GRAM_TILE):
+            for j0 in range(i0, n, _GRAM_TILE):
+                yield slice(i0, i0 + _GRAM_TILE), slice(j0, j0 + _GRAM_TILE)
 
-        if col.null_count != 0:
-            return None
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
-        offs = np.asarray(col.offsets, dtype=np.int64)
-        lens = np.diff(offs)
-        if len(lens) == 0 or lens.min() != lens.max() or lens[0] == 0:
-            return None
-        dim = int(lens[0])
-        vals = col.flatten().to_numpy(zero_copy_only=False)
-        return np.asarray(vals, dtype=np.float64).reshape(n_rows, dim)
-
-    def _fold_dot(a, b):
-        """acc = ((0 + a0·b0) + a1·b1) + ... — the zip_with+aggregate fold."""
+    def fold_gram(a, b):
+        """acc[i, j] = ((0 + a_i0·b_j0) + a_i1·b_j1) + ... over one tile."""
         import numpy as np
 
-        acc = np.zeros(a.shape[0], dtype=np.float64)
-        for i in range(a.shape[1]):
-            acc = acc + a[:, i] * b[:, i]
+        acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
+        for k in range(a.shape[1]):
+            acc += np.multiply.outer(a[:, k], b[:, k])
         return acc
 
-    def _cos_row(a, b):
-        """Python-float replica of the expression cosine for one pair
-        (fallback path: ragged, empty, or null vectors)."""
-        import math
-
-        if a is None or b is None or len(a) != len(b):
-            return None  # zip_with null-pads → null cosine → filtered out
-        acc_a = 0.0
-        acc_b = 0.0
-        for x in a:
-            acc_a = acc_a + x * x
-        for y in b:
-            acc_b = acc_b + y * y
-        denom = math.sqrt(acc_a) * math.sqrt(acc_b)
-        if denom == 0:
-            return 0.0
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc / denom
-
-    def compute(batches: Iterator) -> Iterator:
+    def verify(table):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        for batch in batches:
-            n_rows = batch.num_rows
-            if n_rows == 0:
-                continue
-            ca, cb = batch.column(n_pass), batch.column(n_pass + 1)
-            a, b = _mat(ca, n_rows), _mat(cb, n_rows)
-            if a is not None and b is not None and a.shape == b.shape:
-                na = np.sqrt(_fold_dot(a, a))
-                nb = np.sqrt(_fold_dot(b, b))
-                denom = na * nb
-                cos = np.zeros(n_rows, dtype=np.float64)
-                np.divide(
-                    _fold_dot(a, b), denom, out=cos, where=denom != 0
-                )
-            else:
-                la, lb = ca.to_pylist(), cb.to_pylist()
-                cos = np.array(
-                    [
-                        c if (c := _cos_row(x, y)) is not None else -np.inf
-                        for x, y in zip(la, lb)
-                    ],
-                    dtype=np.float64,
-                )
-            # Spark orders NaN above every double, so NaN >= T is TRUE
-            # there; numpy NaN comparisons are False — re-add them.
-            keep = (cos >= boundary) | np.isnan(cos)
-            if not keep.any():
-                continue
-            idx = pa.array(np.flatnonzero(keep))
-            out = pa.array(
-                [round_dp_exact(float(c)) for c in cos[keep]],
-                type=pa.float64(),
+        ids = table.column(id_col).combine_chunks()
+        vecs = table.column(vec_col).combine_chunks()
+        offs = np.asarray(vecs.offsets, dtype=np.int64)
+        values = vecs.values
+        vnull = np.concatenate(
+            [[0], np.cumsum(np.asarray(values.is_null(), dtype=np.int64))]
+        )
+        valid = (
+            np.asarray(ids.is_valid())
+            & np.asarray(vecs.is_valid())
+            & (vnull[offs[1:]] == vnull[offs[:-1]])
+        )
+        rows = np.flatnonzero(valid)
+        rows = rows[np.asarray(pc.sort_indices(ids.take(pa.array(rows))))]
+        sid = ids.take(pa.array(rows))
+        # dense id rank: equal ids share a rank, so rank_a < rank_b is
+        # exactly the spec's id_a < id_b
+        rank = np.zeros(len(rows), dtype=np.int64)
+        if len(rows) > 1:
+            rank[1:] = np.cumsum(
+                ~np.asarray(pc.equal(sid[1:], sid[:-1]), dtype=bool)
             )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i).take(idx) for i in range(n_pass)] + [out],
-                names=passthrough + [out_col],
-            )
+        vals = np.asarray(values.to_numpy(zero_copy_only=False), dtype=np.float64)
+        starts, lens = offs[rows], offs[rows + 1] - offs[rows]
+        norms = np.zeros(len(rows), dtype=np.float64)
+        empty = np.zeros(0, dtype=np.int64)
+        pa_idx, pb_idx, cos_out = [empty], [empty], [np.zeros(0)]
 
-    return src.mapInArrow(compute, out_schema)
+        def keep(pos_a, pos_b, cos, mask):
+            ia, ib = np.nonzero(mask)
+            pa_idx.append(pos_a[ia])
+            pb_idx.append(pos_b[ib])
+            cos_out.append(cos[ia, ib])
+
+        for length in np.unique(lens):
+            pos = np.flatnonzero(lens == length)
+            m = vals[starts[pos, None] + np.arange(length)]
+            acc = np.zeros(len(pos), dtype=np.float64)
+            for k in range(length):
+                acc = acc + m[:, k] * m[:, k]
+            nrm = np.sqrt(acc)
+            norms[pos] = nrm
+            for ti, tj in tiles(len(pos)):
+                d = np.multiply.outer(nrm[ti], nrm[tj])
+                cos = np.zeros_like(d)
+                np.divide(fold_gram(m[ti], m[tj]), d, out=cos, where=d != 0)
+                # Spark orders NaN above every double, so NaN >= T is TRUE
+                # there; numpy NaN comparisons are False
+                mask = (cos >= boundary) | np.isnan(cos)
+                mask &= np.less.outer(rank[pos[ti]], rank[pos[tj]])
+                keep(pos[ti], pos[tj], cos, mask)
+        if zero_passes:
+            # different lengths: null dot, but a zero norm product → 0.0
+            every = np.arange(len(rows))
+            for ti, tj in tiles(len(rows)):
+                d = np.multiply.outer(norms[ti], norms[tj])
+                mask = (
+                    (d == 0)
+                    & np.not_equal.outer(lens[ti], lens[tj])
+                    & np.less.outer(rank[ti], rank[tj])
+                )
+                keep(every[ti], every[tj], np.zeros_like(d), mask)
+        cos = [round_dp_exact(float(c)) for c in np.concatenate(cos_out)]
+        return pa.table(
+            [
+                sid.take(pa.array(np.concatenate(pa_idx))),
+                sid.take(pa.array(np.concatenate(pb_idx))),
+                pa.array(cos, type=pa.float64()),
+            ],
+            names=["id_a", "id_b", "cos"],
+        )
+
+    return (
+        df.select("bucket", id_col, vec_col)
+        .groupBy("bucket")
+        .applyInArrow(verify, out_schema)
+    )

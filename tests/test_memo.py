@@ -1,11 +1,12 @@
-"""Memo-joins (J1–J5) + cache stats (A1): hits skip compute, corrupt
-payloads fall back, duplicates computed once (FIXTURES.md §3 contract)."""
+"""Memo-joins (J1–J4) + cache stats (A1): hits skip compute, corrupt
+payloads fall back (FIXTURES.md §3 contract). J5's compute-once-per-key
+is convert_batch's, pinned in test_render_pipeline."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ktpm___ocr_spark.operators.memo import cache_stats, dedup_compute_once, memo_join
+from ktpm___ocr_spark.operators.memo import cache_stats, memo_join
 
 
 def test_memo_join_hits_and_misses(spark):
@@ -33,29 +34,6 @@ def test_memo_join_hits_and_misses(spark):
     assert rows["d2"] == ("computed:h2", False)  # corrupt → recompute
     assert rows["d3"] == ("computed:h3", False)
     assert out.count() == 4
-
-
-def test_dedup_compute_once_runs_once_per_distinct(spark):
-    sc = spark.sparkContext
-    calls = sc.accumulator(0)
-    df = spark.createDataFrame(
-        [("a", "same"), ("b", "same"), ("c", "other")], "id string, content string"
-    )
-    df = df.withColumn("key", F.sha2("content", 256))
-
-    def compute(reps):
-        def bump(it):
-            for row in it:
-                calls.add(1)
-                yield row
-
-        bumped = reps.rdd.mapPartitions(bump).toDF(reps.schema)
-        return bumped.withColumn("result", F.upper("content"))
-
-    out = dedup_compute_once(df, "key", compute, payload_cols=["content"])
-    got = {r["id"]: r["result"] for r in out.collect()}
-    assert got == {"a": "SAME", "b": "SAME", "c": "OTHER"}
-    assert calls.value == 2  # distinct keys, not rows
 
 
 def test_cache_stats_rates(spark):

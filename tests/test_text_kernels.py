@@ -476,7 +476,7 @@ def test_containment_pairs_kernel_equals_expression(spark, sf001_dir):
 
 def test_round5_ge_boundary_transform_is_exact():
     """round(d, 5) >= T  ⟺  d >= float64(T - 0.000005) — the mirrored
-    form of the round4 <= transform, used by cosine_pairs_arrow's
+    form of the round4 <= transform, used by cosine_bucket_pairs_arrow's
     threshold test. Pin against the Decimal HALF_UP model on dense
     random doubles around both thresholds the engine uses."""
     from decimal import ROUND_HALF_UP, Decimal
@@ -504,14 +504,74 @@ def test_round5_ge_boundary_transform_is_exact():
             assert (d >= boundary) == spark_round5_ge(d, t), (d, t)
 
 
-def _vec_pairs_df(spark, seed=31, n=200, dim=16):
-    """Candidate-pair relation with planted exact dups, near-boundary
-    cosines, zero vectors, and random pairs."""
+def _bucket_spec(b, threshold):
+    """Test-local spec of ``cosine_bucket_pairs_arrow``: the Column-spec
+    composition the production path replaced — bucket self-join with
+    ``id_a < id_b``, then ``round(cosine(a, b), 5) >= threshold``."""
+    from ktpm___ocr_spark.operators.similarity import cosine
+
+    return (
+        b.alias("l")
+        .join(
+            b.alias("r"),
+            (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.id") < F.col("r.id")),
+        )
+        .select(
+            F.col("l.id").alias("id_a"),
+            F.col("r.id").alias("id_b"),
+            F.round(cosine(F.col("l.vec"), F.col("r.vec")), 5).alias("cos"),
+        )
+        .filter(F.col("cos") >= threshold)
+    )
+
+
+def _pair_multiset(df):
+    """Sorted (id_a, id_b, cos) rows; NaN spelled out so it compares."""
+    import math
+
+    return sorted(
+        (r["id_a"], r["id_b"], "NaN" if math.isnan(r["cos"]) else r["cos"])
+        for r in df.collect()
+    )
+
+
+def _kernel_equals_spec(b, threshold):
+    got = _pair_multiset(tk.cosine_bucket_pairs_arrow(b, "id", "vec", threshold))
+    assert got == _pair_multiset(_bucket_spec(b, threshold))
+    return got
+
+
+def _bucket_rows(pairs):
+    """One bucket per (name, va, vb) pair: rows '<name>a' and '<name>b',
+    so each bucket holds exactly the one candidate pair."""
+    return [
+        row
+        for name, va, vb in pairs
+        for row in ((f"{name}a", va, name), (f"{name}b", vb, name))
+    ]
+
+
+def _vec_df(spark, rows):
+    return spark.createDataFrame(rows, "id string, vec array<double>, bucket string")
+
+
+def test_cosine_pairs_kernel_equals_expression(spark):
+    """cosine_bucket_pairs_arrow ≡ the bucket self-join spec — exact pair
+    set AND exact values, on dup/boundary/random/zero pairs, a cosine
+    that is exactly the HALF_UP boundary double, plus one hot
+    bucket larger than a Gram tile (off-diagonal tiles and the
+    diagonal-tile id_a < id_b mask), its ids inserted out of order and
+    its cosines spread around the threshold."""
+    import math
+    from decimal import Decimal
+
     import numpy as np
 
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
+    rng = np.random.default_rng(31)
+    dim = 16
+    pairs = []
+    for i in range(200):
         a = rng.normal(size=dim)
         a /= np.linalg.norm(a)
         kind = i % 4
@@ -528,128 +588,109 @@ def _vec_pairs_df(spark, seed=31, n=200, dim=16):
             b /= np.linalg.norm(b)
         else:  # zero vector → denom 0 → cos 0.0
             b = np.zeros(dim)
-        rows.append((f"a{i:04d}", f"b{i:04d}", a.tolist(), b.tolist()))
-    return spark.createDataFrame(
-        rows,
-        "id_a string, id_b string, _va array<double>, _vb array<double>",
-    )
-
-
-def test_cosine_pairs_kernel_equals_expression(spark):
-    """cosine_pairs_arrow ≡ round(cosine(a,b),5) >= T — exact pair set
-    AND exact values, on dup/boundary/random/zero pairs."""
-    from ktpm___ocr_spark.operators.similarity import cosine
-
-    df = _vec_pairs_df(spark)
-    got = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in tk.cosine_pairs_arrow(
-            df, "_va", "_vb", threshold=0.95, round_dp=5
-        ).collect()
-    }
-    want = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in df.select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("_va"), F.col("_vb")), 5).alias("cos"),
-        )
-        .filter(F.col("cos") >= 0.95)
-        .collect()
-    }
-    assert got == want
-    assert len(got) >= 50  # the planted dups at minimum
+        pairs.append((f"p{i:04d}", a.tolist(), b.tolist()))
+    # cosines that ARE the boundary double T - 5e-6 (round5 → 0.95, kept)
+    # and the double just below it (round5 → 0.94999, dropped)
+    edge = float(Decimal("0.95") - Decimal("0.000005"))
+    for name, c in (("x_at", edge), ("x_below", math.nextafter(edge, 0.0))):
+        pairs.append((name, [1.0, 0.0], [c, math.sqrt(1 - c * c)]))
+    # found by nudging the last component ULP by ULP: the left-to-right
+    # fold lands exactly on the boundary double (kept), while np.dot, a
+    # BLAS matmul and math.fsum all give the double below it (dropped)
+    pairs.append((
+        "x_fold",
+        [-2.0395038375946424, -0.3403166247023773, -0.6086106159129299,
+         0.5327215998890392, -2.279026489055327, 1.1744986790091876,
+         1.0669833108953142, -1.3020708582457947],
+        [-0.6593893650905104, -0.1872303799867496, -0.15618741717588286,
+         0.21887479203746818, -0.35663392878822137, 0.2876266320706281,
+         0.3758959899688241, -0.3265503517501934],
+    ))
+    rows = _bucket_rows(pairs)
+    n_hot = tk._GRAM_TILE + 60
+    base = rng.normal(size=dim)
+    for i in rng.permutation(n_hot):
+        v = base + rng.normal(size=dim) * 0.25
+        rows.append((f"h{i:04d}", v.tolist(), "hot"))
+    got = _kernel_equals_spec(_vec_df(spark, rows), 0.95)
+    assert sum(1 for r in got if r[0].startswith("p")) >= 50  # planted dups
+    assert [r for r in got if r[0].startswith("x")] == [
+        ("x_ata", "x_atb", 0.95),
+        ("x_folda", "x_foldb", 0.95),
+    ]
+    hot = [r for r in got if r[0].startswith("h")]
+    cross_tile = [r for r in hot if r[1] >= f"h{tk._GRAM_TILE:04d}"]
+    assert 0 < len(hot) < n_hot * (n_hot - 1) // 2 and cross_tile
 
 
 def test_cosine_pairs_kernel_fallback_ragged_and_null(spark):
-    """Null or length-mismatched vectors are dropped by BOTH paths
-    (zip_with null-pads → null cosine → filtered), and the ragged batch
-    routes through the row fallback without diverging."""
-    from ktpm___ocr_spark.operators.similarity import cosine
+    """Null, null-element and length-mismatched vectors match the spec:
+    zip_with null-pads, so a ragged pair has a null dot and is dropped —
+    unless one side has zero norm, where the spec's ``when(d == 0, 0.0)``
+    fires first and the pair is kept with cos 0.0 at a threshold ≤ 0.
+    Two rows with equal ids never pair with each other."""
+    import math
 
-    rows = [
-        ("p1", [1.0, 0.0], [1.0, 0.0]),          # cos 1.0 → kept
-        ("p2", None, [1.0, 0.0]),                  # null → dropped
-        ("p3", [1.0, 0.0, 0.0], [1.0, 0.0]),      # ragged → dropped
-        ("p4", [0.0, 0.0], [1.0, 0.0]),           # zero norm → cos 0.0
-        ("p5", [3.0, 4.0], [3.0, 4.0]),           # cos 1.0 → kept
+    v = [1.0, 0.0]
+    rows = _bucket_rows(
+        [
+            ("p1", [1.0, 0.0], [1.0, 0.0]),        # cos 1.0 → kept
+            ("p2", None, [1.0, 0.0]),               # null → dropped
+            ("p3", [1.0, 0.0, 0.0], [1.0, 0.0]),   # ragged → dropped
+            ("p4", [0.0, 0.0], [1.0, 0.0]),        # zero norm → cos 0.0
+            ("p5", [3.0, 4.0], [3.0, 4.0]),        # cos 1.0 → kept
+            ("p6", [1.0, None], [1.0, 0.0]),       # null element → dropped
+            ("p7", [0.0, 0.0], [1.0, 0.0, 0.0]),   # ragged, zero norm
+            ("p8", [], [1.0]),                      # empty: zero norm
+            ("p9", [1.0, 0.0], [-1e-9, 1.0]),      # rounds to +0.0, not -0.0
+        ]
+    ) + [("e1", v, "eq"), ("e1", v, "eq"), ("e2", v, "eq")]
+    df = _vec_df(spark, rows)
+    assert _kernel_equals_spec(df, 0.95) == [
+        ("e1", "e2", 1.0),
+        ("e1", "e2", 1.0),
+        ("p1a", "p1b", 1.0),
+        ("p5a", "p5b", 1.0),
     ]
-    df = spark.createDataFrame(
-        rows, "pair string, _va array<double>, _vb array<double>"
-    )
-    got = {
-        r["pair"]: r["cos"]
-        for r in tk.cosine_pairs_arrow(
-            df, "_va", "_vb", threshold=0.95, round_dp=5
-        ).collect()
-    }
-    want = {
-        r["pair"]: r["cos"]
-        for r in df.select(
-            "pair",
-            F.round(cosine(F.col("_va"), F.col("_vb")), 5).alias("cos"),
-        )
-        .filter(F.col("cos") >= 0.95)
-        .collect()
-    }
-    assert got == want == {"p1": 1.0, "p5": 1.0}
+    low = _kernel_equals_spec(df, 0.0)
+    assert ("p7a", "p7b", 0.0) in low and ("p8a", "p8b", 0.0) in low
+    assert not any(r[0] in ("p2a", "p3a", "p6a") for r in low)
+    assert ("e1", "e1", 1.0) not in low
+    (neg,) = [r[2] for r in low if r[0] == "p9a"]
+    assert neg == 0.0 and math.copysign(1.0, neg) == 1.0
 
 
 def test_cosine_pairs_kernel_nan_matches_spark_ordering(spark):
-    """Non-finite vectors (r7 advice): Spark orders NaN above every
-    double, so a NaN cosine passes ``round(cos,5) >= T`` and the
-    expression path KEEPS the row with cos = NaN — the kernel must too
-    (numpy NaN comparisons are False, so this needs the explicit
-    isnan re-add), on both the matrix path and the ragged fallback."""
-    import math
-
-    from ktpm___ocr_spark.operators.similarity import cosine
-
+    """Non-finite vectors: Spark orders NaN above every double, so a NaN
+    cosine passes ``round(cos,5) >= T`` and the spec KEEPS the pair with
+    cos = NaN — the kernel must too (numpy NaN comparisons are False, so
+    this needs the explicit isnan re-add). Checked with one pair per
+    bucket and with every row in one bucket, where each NaN/±Inf vector
+    meets every other vector, ragged ones included."""
     nan, inf = float("nan"), float("inf")
-    base = [
+    pairs = [
         ("n1", [nan, 0.0], [1.0, 0.0]),   # NaN dot → NaN cos → KEPT
         ("n2", [inf, 0.0], [1.0, 0.0]),   # inf/inf → NaN cos → KEPT
         ("n3", [1.0, nan], [1.0, nan]),   # NaN both sides → KEPT
+        ("n4", [-inf, 0.0], [1.0, 0.0]),  # -inf/inf → NaN cos → KEPT
         ("ok", [3.0, 4.0], [3.0, 4.0]),   # finite control → kept, 1.0
         ("lo", [1.0, 0.0], [0.0, 1.0]),   # cos 0.0 → dropped
+        ("rg", [1.0, 0.0, 0.0], [1.0, 0.0]),  # ragged → dropped
     ]
-    # second variant adds a ragged row, which routes the WHOLE batch
-    # through the row fallback — the same NaN rule must hold there
-    ragged = base + [("rg", [1.0, 0.0, 0.0], [1.0, 0.0])]
-
-    def canon(d):
-        return {k: ("NaN" if math.isnan(v) else v) for k, v in d.items()}
-
-    for rows in (base, ragged):
-        df = spark.createDataFrame(
-            rows, "pair string, _va array<double>, _vb array<double>"
-        ).coalesce(1)
-        got = {
-            r["pair"]: r["cos"]
-            for r in tk.cosine_pairs_arrow(
-                df, "_va", "_vb", threshold=0.95, round_dp=5
-            ).collect()
-        }
-        want = {
-            r["pair"]: r["cos"]
-            for r in df.select(
-                "pair",
-                F.round(cosine(F.col("_va"), F.col("_vb")), 5).alias("cos"),
-            )
-            .filter(F.col("cos") >= 0.95)
-            .collect()
-        }
-        assert canon(got) == canon(want)
-        assert {"n1", "n2", "n3", "ok"} <= set(got) and "lo" not in got
+    per_pair = _bucket_rows(pairs)
+    got = _kernel_equals_spec(_vec_df(spark, per_pair), 0.95)
+    assert {r[0] for r in got} == {"n1a", "n2a", "n3a", "n4a", "oka"}
+    one_bucket = [(i, vec, "all") for i, vec, _ in per_pair]
+    got = _kernel_equals_spec(_vec_df(spark, one_bucket), 0.95)
+    assert ("n1a", "oka", "NaN") in got
 
 
 def test_embedding_near_dups_arrow_equals_expr(spark):
-    """The full operator (bucket join + kernel verify) is value-identical
-    to the Column-spec composition (lsh_bucket self-join →
-    round(cosine, 5) ≥ threshold) on the planted near-dup corpus."""
+    """The full operator (lsh_bucket + bucket Gram verify) is
+    value-identical to the Column-spec composition (lsh_bucket self-join
+    → round(cosine, 5) ≥ threshold) on the planted near-dup corpus."""
     from ktpm___ocr_spark.operators.similarity import (
         center_vectors,
-        cosine,
         embedding_near_dups,
         hyperplanes,
         lsh_bucket,
@@ -672,33 +713,46 @@ def test_embedding_near_dups_arrow_equals_expr(spark):
         dim=32,
     )
     emb = emb.localCheckpoint(eager=True)  # same input relation twice
-    got = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in embedding_near_dups(
-            emb, "id", "vec", threshold=0.8, n_planes=6, dim=32
-        ).collect()
-    }
+    got = _pair_multiset(
+        embedding_near_dups(emb, "id", "vec", threshold=0.8, n_planes=6, dim=32)
+    )
     b = emb.select(
         "id", "vec", lsh_bucket(F.col("vec"), hyperplanes(32, 6, 7)).alias("bucket")
     )
-    want = {
-        (row["id_a"], row["id_b"]): row["cos"]
-        for row in b.alias("l")
-        .join(
-            b.alias("r"),
-            (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.round(cosine(F.col("l.vec"), F.col("r.vec")), 5).alias("cos"),
-        )
-        .filter(F.col("cos") >= 0.8)
-        .collect()
-    }
-    assert got == want
-    assert len(got) >= 30
+    assert got == _pair_multiset(_bucket_spec(b, 0.8))
+    assert len(got) >= 30  # most planted near-dups share a bucket
+
+
+def test_embedding_near_dups_python_fanout_follows_shuffle_partitions(spark):
+    """An input spread over 8 × defaultParallelism partitions must not
+    set the Python fan-out: the plan is one bucket exchange sized by
+    ``spark.sql.shuffle.partitions`` feeding one FlatMapGroupsInArrow —
+    no pair join and no per-pair MapInArrow (every Python task pays a
+    fixed start cost, text_kernels module docstring)."""
+    import re
+
+    import numpy as np
+
+    from ktpm___ocr_spark.operators.similarity import embedding_near_dups
+
+    rng = np.random.default_rng(5)
+    vecs = rng.normal(size=(400, 8))
+    vecs[1::2] = vecs[::2]  # planted exact dups: (2k, 2k+1)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "id long, vec array<double>"
+    ).repartition(spark.sparkContext.defaultParallelism * 8)
+    out = embedding_near_dups(df, "id", "vec", threshold=0.99, n_planes=4, dim=8)
+    got = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    assert {(2 * k, 2 * k + 1) for k in range(200)} <= got
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    for node in ("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin",
+                 "MapInArrow", "ShuffledHashJoin", "BroadcastHashJoin"):
+        assert node not in plan, (node, plan)
+    parts = [int(n) for n in re.findall(r"hashpartitioning\(bucket#\d+, (\d+)\)", plan)]
+    limit = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(parts) == 1 and parts[0] <= limit, (parts, plan)
 
 
 # ------------------------------------------- r7 review fixes
