@@ -921,8 +921,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = _t(spark, sf, "documents")
         # persist is load-bearing (sh is consumed three times: the index
         # explode and both verify sides); sessions running many queries
-        # reclaim it with spark.catalog.clearCache() — the same
-        # convention as minhash_near_dups
+        # reclaim it with spark.catalog.clearCache()
         sh = d.select(
             "doc_id", dd.shingles(F.col("text")).alias("sh")
         ).persist()

@@ -107,10 +107,10 @@ def run_chain(
         os.remove(sr.manifest_path)
 
     def stage(name: str, mk_df, balance: bool = False) -> str:
-        # mk_df is a THUNK: several operators (minhash_near_dups,
-        # connected_components) eagerly materialize internally
-        # (localCheckpoint), so building the DataFrame is part of the
-        # stage's cost and must happen inside the timed window
+        # mk_df is a THUNK: connected_components (one checkpoint per
+        # generation) and center_vectors (its mean row) run jobs while
+        # the DataFrame is built, so building it is part of the stage's
+        # cost and must happen inside the timed window
         out, skipped, wall = sr.run_stage(name, mk_df)
         rows = spark.read.parquet(out).count()
         rec = {

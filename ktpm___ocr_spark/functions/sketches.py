@@ -501,12 +501,11 @@ def kmv_grouped_quantiles(
             cached = winners.persist()
             broadcast_winners = cached.count() <= _MAX_BROADCAST_WINNER_ROWS
             # swap the session-lifetime persist() cache for checkpoint
-            # blocks BEFORE returning (the minhash_near_dups convention):
-            # the blocks are k·|groups|-bounded, are the data the join
-            # consumes, and are freed with the returned frame
-            # (ContextCleaner / _release_checkpoint) instead of
-            # accumulating in executor storage across repeated calls in
-            # a long session (r6 advice)
+            # blocks BEFORE returning: the blocks are k·|groups|-bounded,
+            # are the data the join consumes, and are freed with the
+            # returned frame (ContextCleaner / _release_checkpoint)
+            # instead of accumulating in executor storage across
+            # repeated calls in a long session (r6 advice)
             winners = cached.localCheckpoint(eager=True)
             cached.unpersist()
         if broadcast_winners:

@@ -33,14 +33,15 @@ family; near-dup candidate recall at J ≳ 0.6 is property-tested on
 planted variant pairs (tests/test_dedup.py), and precision is untouched
 because candidates are always re-verified by exact Jaccard.
 
-Scale notes: the LSH band join shuffles on (band_idx, band_hash) whose
-cardinality ≫ keys, so it distributes well; hot buckets (boilerplate-
-identical shingle sets) are exactly what AQE skew-join splitting handles.
+Scale notes: candidates aggregate on (band_idx, band_hash), whose
+cardinality ≫ keys; a hot bucket's pairs are exploded after a
+round-robin exchange, so its quadratic work spreads over every task.
+The pair operators return lazy plans: the caller materializes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ktpm___ocr_spark.functions.exprutil import let, let2
@@ -208,20 +209,26 @@ def ngram_containment(a_text, b_text, n: int = SHINGLE_N) -> F.Column:
 
 def _self_pairs(bands: DataFrame, id_col: str) -> DataFrame:
     """Distinct ``(id_a, id_b)`` with ``id_a < id_b`` for every two rows
-    of ``bands`` that share a ``(band_idx, band_hash)`` bucket — the
-    band self-join. Never materializes the O(n²) pair space: the join
-    key is the bucket, not the id."""
-    left, right = bands.alias("l"), bands.alias("r")
+    of ``bands`` that share a ``(band_idx, band_hash)`` bucket.
+
+    One aggregation collects each bucket's sorted distinct ids, so a
+    lazy (Python-kernel) ``bands`` is evaluated once, where a self-join
+    reads it on both sides. Each id pairs with the ids after it; the
+    round-robin exchange before that quadratic explode spreads a hot
+    bucket over every task (the *DS2* skew split). Null ids never pair."""
+    par = bands.sparkSession.sparkContext.defaultParallelism
+    ids = F.col("_ids")
     return (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
+        bands.groupBy("band_idx", "band_hash")
+        .agg(F.array_sort(F.collect_set(id_col)).alias("_ids"))
+        .filter(F.size(ids) > 1)
+        .select(ids, F.posexplode(ids).alias("_pos", "id_a"))
+        .repartition(par)
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            "id_a",
+            F.explode(
+                F.slice(ids, F.col("_pos") + 2, F.size(ids) - F.col("_pos") - 1)
+            ).alias("id_b"),
         )
         .distinct()
     )
@@ -240,6 +247,18 @@ def _join_texts(
     ).join(
         texts.withColumnsRenamed({id_col: "id_b", text_col: "text_b"}), "id_b"
     )
+
+
+def _band_candidates(
+    df: DataFrame, id_col: str, text_col: str, k: int, bands: int
+) -> DataFrame:
+    """Candidate pairs with their texts, as one lazy plan: ``df`` spread
+    to cluster parallelism (signature compute, not IO, is the cost), its
+    LSH bands, :func:`_self_pairs`, :func:`_join_texts`."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    df = df.repartition(par, id_col)
+    b = lsh_bands(df, id_col, text_col, k, bands)
+    return _join_texts(_self_pairs(b, id_col), df, id_col, text_col)
 
 
 def containment_pairs(
@@ -262,24 +281,15 @@ def containment_pairs(
     computes ``round(ngram_containment, 4)`` both ways, value-identical
     to the Column spec (tests/test_text_kernels.py).
 
-    Output: (id_a, id_b, cont_a_in_b, cont_b_in_a)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    df = df.repartition(par, id_col)
-    b = lsh_bands(df, id_col, text_col, k=k, bands=k).persist()
-    try:
-        joined = _join_texts(_self_pairs(b, id_col), df, id_col, text_col)
-        scored = shingle_metrics_arrow(
-            joined, "text_a", "text_b", metrics=("cont_a_in_b", "cont_b_in_a")
-        )
-        out = scored.filter(
-            (F.col("cont_a_in_b") >= threshold)
-            | (F.col("cont_b_in_a") >= threshold)
-        ).select("id_a", "id_b", "cont_a_in_b", "cont_b_in_a")
-        # same persist hygiene as minhash_near_dups: materialize the small
-        # result, release the bands relation before returning
-        return out.localCheckpoint(eager=True)
-    finally:
-        b.unpersist()
+    Output: (id_a, id_b, cont_a_in_b, cont_b_in_a). Returns the lazy
+    plan: nothing runs and nothing is cached until the caller's action."""
+    scored = shingle_metrics_arrow(
+        _band_candidates(df, id_col, text_col, k, bands=k),
+        "text_a", "text_b", metrics=("cont_a_in_b", "cont_b_in_a"),
+    )
+    return scored.filter(
+        (F.col("cont_a_in_b") >= threshold) | (F.col("cont_b_in_a") >= threshold)
+    ).select("id_a", "id_b", "cont_a_in_b", "cont_b_in_a")
 
 
 def minhash_near_dups(
@@ -293,8 +303,8 @@ def minhash_near_dups(
     """Full MinHash-LSH near-dup pipeline: bands → distinct candidate
     pairs → exact Jaccard verify ≥ threshold.
 
-    Never materializes the O(n²) pair space: the self-join is on
-    (band_idx, band_hash) buckets only. The verify runs in the
+    Never materializes the O(n²) pair space: candidates come only from
+    ids sharing a (band_idx, band_hash) bucket. The verify runs in the
     shingle-metrics kernel: the identical ``round(ngram_jaccard, 4)`` at
     ~50-200 µs/pair vs ~1.8 ms for the Catalyst shingle-set expression
     (measured on the r7 nightly probe: 322k pair verifies, 579 s
@@ -302,31 +312,15 @@ def minhash_near_dups(
 
     Physical notes: the input is repartitioned to cluster parallelism
     before the hash-heavy signature stage (a skinny scan often arrives in
-    far fewer splits than there are cores — signature compute, not IO, is
-    the bottleneck), and the bands relation is persisted because the
-    self-join consumes it twice (without it Spark re-evaluates the whole
-    signature subtree per side).
+    far fewer splits than there are cores). :func:`_self_pairs` reads the
+    bands once, so the banding kernel runs once per action without a
+    persist. Returns the lazy plan: nothing runs and nothing is cached
+    until the caller's action.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    df = df.repartition(par, id_col)
-    # persist is load-bearing (the self-join consumes bands twice; without
-    # it the whole signature subtree evaluates once per side). The relation
-    # is released in the finally block below — the verified pair set (tiny
-    # vs the bands relation) is eagerly materialized first, so no cached
-    # bands blocks outlive the call even in long-lived sessions.
-    b = lsh_bands(df, id_col, text_col, k, bands).persist()
-    try:
-        joined = _join_texts(_self_pairs(b, id_col), df, id_col, text_col)
-        verified = shingle_metrics_arrow(joined, "text_a", "text_b").filter(
-            F.col("jaccard") >= threshold
-        ).select("id_a", "id_b", "jaccard")
-        # materialize the (small) result so the bands relation can be freed
-        # here rather than leaking until a caller-side clearCache; the
-        # checkpoint blocks ARE the returned data and are reclaimed by
-        # ContextCleaner when the frame is dropped (or _release_checkpoint).
-        return verified.localCheckpoint(eager=True)
-    finally:
-        b.unpersist()
+    joined = _band_candidates(df, id_col, text_col, k, bands)
+    return shingle_metrics_arrow(joined, "text_a", "text_b").filter(
+        F.col("jaccard") >= threshold
+    ).select("id_a", "id_b", "jaccard")
 
 
 def boilerplate_line_filter(
@@ -745,8 +739,8 @@ def incremental_near_dups(
             # immediately, so the increment's bands evaluate once per
             # consuming join instead — the caller owns the lifecycle.
             return verified
-        # same persist hygiene as minhash_near_dups: materialize the small
-        # verified set, release the increment's bands before returning
+        # materialize the small verified set, then release the
+        # increment's bands before returning
         return verified.localCheckpoint(eager=True)
     finally:
         nb.unpersist()
@@ -800,12 +794,11 @@ def connected_components(
     story as metrics.CheckpointedRun). Raises if ``max_iter`` rounds do
     not reach the fixpoint (never silently returns partial clusters).
     """
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
-        .distinct()
-        .persist()
-    )
+    # both directions from ONE read of ``pairs`` (a union of two
+    # projections would evaluate a lazy pair plan twice)
+    fwd = F.struct(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+    rev = F.struct(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
+    edges = pairs.select(F.inline(F.array(fwd, rev))).distinct().persist()
     labels = (
         edges.groupBy("u")
         .agg(F.min("v").alias("m"))
@@ -822,7 +815,8 @@ def connected_components(
             # materialized: the pointer-jumping self-join below consumes
             # propagated on BOTH sides — without the checkpoint the
             # edges⋈labels⋈nbr_min subtree re-evaluates once per side,
-            # doubling the hot loop's per-round shuffle work (r5 review)
+            # doubling the hot loop's per-round shuffle work (r5 review).
+            # It carries the round's old label for the convergence count.
             propagated = (
                 labels.join(nbr_min, "u", "left")
                 .select(
@@ -830,13 +824,17 @@ def connected_components(
                     F.least(
                         F.col("label"), F.coalesce("nbr_min", F.col("label"))
                     ).alias("label"),
+                    F.col("label").alias("old"),
                 )
                 .localCheckpoint(eager=True)
             )
+            _release_checkpoint(labels)  # propagated is materialized
             # pointer jumping: labels are themselves node ids, so follow
             # label→label(label) and take the min — halves the remaining
-            # path to the component minimum every round
-            new_labels = (
+            # path to the component minimum every round. The changed-label
+            # count is observed in this checkpoint job (no extra job).
+            obs = Observation()
+            labels = (
                 propagated.alias("x")
                 .join(
                     propagated.alias("y"),
@@ -849,20 +847,14 @@ def connected_components(
                         F.col("x.label"),
                         F.coalesce(F.col("y.label"), F.col("x.label")),
                     ).alias("label"),
+                    F.col("x.old").alias("old"),
                 )
+                .observe(obs, F.count_if(F.col("label") != F.col("old")).alias("n"))
+                .select("u", "label")
                 .localCheckpoint(eager=True)
             )
-            _release_checkpoint(propagated)  # new_labels is materialized
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "u")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            _release_checkpoint(labels)  # free the superseded generation
-            labels = new_labels
-            if changed == 0:
+            _release_checkpoint(propagated)  # new labels are materialized
+            if obs.get["n"] == 0:
                 break
         else:
             raise RuntimeError(

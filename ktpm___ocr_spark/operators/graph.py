@@ -12,7 +12,8 @@ hash aggregate (inflow per dst) + one left join back to the node set —
 all shuffles on the node key. The plan grows linearly with iterations
 (each generation is referenced once); for deep iteration counts at
 100 TB, localCheckpoint per generation the way ``dedup.
-connected_components`` does (``dedup.py``) — at the default 5 rounds the
+connected_components`` does (``dedup.py``; its convergence count is an
+``Observation`` on that checkpoint job) — at the default 5 rounds the
 linear plan is cheaper than materialization.
 
 Simplified model (teleport + link mass; dangling mass dropped) — the

@@ -130,8 +130,9 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     because the bound arrays feed multiple fold consumers per row."""
     vd = _to_double(vec)
     bits = [
+        # one array literal per plane: ``dim`` F.lit calls took ~4× longer
         F.when(
-            dot(vd, F.array(*[F.lit(p) for p in plane])) > 0, F.lit("1")
+            dot(vd, F.lit(np.array(plane, dtype=np.float64))) > 0, F.lit("1")
         ).otherwise(F.lit("0"))
         for plane in planes
     ]

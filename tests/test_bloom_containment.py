@@ -85,3 +85,29 @@ def test_result_asof_snapshot_reads(spark, tmp_path):
     assert run.result_asof(4).count() == sizes[1]
     with pytest.raises(ValueError):
         run.result_asof(0)
+
+
+def _words(prefix: str, n: int) -> list[str]:
+    return [f"{prefix}{i}" for i in range(n)]
+
+
+def test_containment_pairs_keeps_pair_at_exact_threshold(spark):
+    """Kept: doc 1 has 20 distinct 3-shingles, 10 of them inside doc 2
+    (cont_a_in_b = 0.5 exactly) while doc 2 has 21, so cont_b_in_a =
+    10/21 < 0.5 — the keep rule is ``>=`` and EITHER direction. Dropped:
+    docs 3/4 share 9 shingles, 9/19 and 9/20, just below both ways."""
+    run = _words("run", 12)  # 12 words → 10 shared shingles
+    a = run + _words("xa", 10)  # 22 words → 20 shingles
+    b = _words("yb", 1) + run + _words("zb", 10)  # 23 words → 21 shingles
+    run2 = _words("rr", 11)  # 9 shared shingles
+    c = run2 + _words("xc", 10)  # 21 words → 19 shingles
+    d = _words("yd", 1) + run2 + _words("zd", 10)  # 22 words → 20 shingles
+    df = spark.createDataFrame(
+        [(i + 1, " ".join(t)) for i, t in enumerate((a, b, c, d))],
+        "doc_id long, text string",
+    )
+    got = containment_pairs(df, "doc_id", "text", threshold=0.5).collect()
+    assert [tuple(r) for r in got] == [(1, 2, 0.5, 0.4762)]
+    # docs 3/4 must still reach the verify for their drop to mean anything
+    loose = containment_pairs(df, "doc_id", "text", threshold=0.45).collect()
+    assert {(r["id_a"], r["id_b"]) for r in loose} == {(1, 2), (3, 4)}

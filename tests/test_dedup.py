@@ -128,6 +128,69 @@ def test_ngram_jaccard_bounds(spark, docs):
     assert 0.0 < vals[(1, 3)] < 1.0
 
 
+def _self_pairs_spec(bands, id_col):
+    """The band self-join the aggregation form replaced: every two rows
+    of one (band_idx, band_hash) bucket, ``id_a < id_b``, distinct."""
+    left, right = bands.alias("l"), bands.alias("r")
+    return (
+        left.join(
+            right,
+            (F.col("l.band_idx") == F.col("r.band_idx"))
+            & (F.col("l.band_hash") == F.col("r.band_hash"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+
+
+def test_self_pairs_equals_band_self_join(spark):
+    """One hot 300-id bucket (44,850 pairs, ids inserted out of order),
+    a pair sharing three buckets, an id repeated inside one bucket, and
+    null ids, which pair with nothing."""
+    from ktpm___ocr_spark.operators.dedup import _self_pairs
+
+    hot = [(i, 0, "hot") for i in reversed(range(1000, 1300))]
+    multi = [(i, b, f"m{b}") for b in (1, 2, 3) for i in (7, 8)]
+    repeated = [(5, 0, "rep"), (5, 0, "rep"), (6, 0, "rep"), (5, 1, "solo")]
+    nulls = [(None, 0, "hot"), (None, 2, "nul"), (None, 2, "nul"), (9, 2, "nul")]
+    bands = spark.createDataFrame(
+        hot + multi + repeated + nulls, "id long, band_idx int, band_hash string"
+    ).repartition(3)
+    got = _self_pairs(bands, "id")
+    want = _self_pairs_spec(bands, "id")
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    assert len(rows) == 300 * 299 // 2 + 2
+    assert (7, 8) in rows and (5, 6) in rows
+
+
+def test_pair_operators_run_no_job_while_building(spark, docs):
+    """Building the near-dup pair plans runs no Spark job and caches
+    nothing: the caller's action materializes them."""
+    from ktpm___ocr_spark.operators.dedup import containment_pairs
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    sc.setJobGroup("pair-operators-build", "plan construction only")
+    try:
+        mh = minhash_near_dups(docs, "id", "text", threshold=0.5)
+        cp = containment_pairs(docs, "id", "text", threshold=0.5)
+        jobs = sc.statusTracker().getJobIdsForGroup("pair-operators-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+    assert (1, 2) in {(r["id_a"], r["id_b"]) for r in mh.collect()}
+    assert (1, 2) in {(r["id_a"], r["id_b"]) for r in cp.collect()}
+
+
 def test_simhash_properties(spark, docs):
     sims = {
         r["id"]: r["s"] for r in docs.select("id", simhash64(F.col("text")).alias("s")).collect()
@@ -212,6 +275,24 @@ def test_connected_components_100_node_chain_converges_logarithmically(spark):
     would need ~99 rounds."""
     got = _cc(spark, [(i, i + 1) for i in range(1, 100)])
     assert got == {i: 1 for i in range(1, 101)}
+
+
+def test_connected_components_100_node_chain_round_boundary(spark):
+    """The 100-node chain reaches its fixpoint in exactly 7 rounds: 7
+    returns the single cluster, 6 raises. So does a 96-node chain, whose
+    last changing round moves ONE label. Pins the per-round changed-label
+    count: a count off by one round or by one label moves a boundary."""
+    for n in (100, 96):
+        df = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
+        )
+        got = {
+            r["node"]: r["cluster_id"]
+            for r in connected_components(df, max_iter=7).collect()
+        }
+        assert got == {i: 1 for i in range(1, n + 1)}
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(df, max_iter=6)
 
 
 def test_incremental_near_dups_probes_persisted_band_table(spark, tmp_path, docs):

@@ -14,6 +14,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _banding_kernels(plan: str) -> int:
+    """MapInArrow nodes that emit ``band_hash`` (the LSH banding kernel)."""
+    return sum(
+        1
+        for line in plan.splitlines()
+        if "MapInArrow" in line and "band_hash#" in line.split("[")[-1]
+    )
+
+
 def test_filter_pushdown_reaches_scan(spark, sf01_dir):
     df = spark.read.parquet(f"{sf01_dir}/documents.parquet").filter(
         "doc_id < 100"
@@ -88,6 +97,8 @@ def test_lsh_band_join_is_shuffle_not_cartesian(spark, sf01_dir):
     plan = _plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    # the real plan, not a checkpoint scan: bands are computed once
+    assert _banding_kernels(plan) == 1, plan
 
 
 def test_ann_broadcast_queries_no_shuffle_of_corpus(spark, sf01_dir):
@@ -148,6 +159,8 @@ def test_containment_band_join_is_shuffle_not_cartesian(spark, sf01_dir):
     plan = _plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    # the real plan, not a checkpoint scan: bands are computed once
+    assert _banding_kernels(plan) == 1, plan
 
 
 def test_bm25_broadcasts_query_and_stats_no_cartesian(spark, sf01_dir):
