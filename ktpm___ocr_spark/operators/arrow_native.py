@@ -2,15 +2,19 @@ r"""Arrow-native extraction: ``mapInArrow`` + pyarrow C++ kernels.
 
 The purest form of the input_hint's "vectorized pandas/Arrow UDFs, no
 per-row Python": record batches flow Spark→Arrow with zero conversion,
-normalization and word counting run in pyarrow's RE2-backed C++ kernels
-over the *flattened* span child arrays (one contiguous string array for
-the whole batch — never per-row), the block-fusion classifier is numpy
-over primitive arrays, and the output list array is rebuilt from offsets.
+and every step runs over the *flattened* span child arrays (one
+contiguous string array for the whole batch — never per-row). Word
+counts and the ``\r`` / newline-run / ``<a`` containment tests are byte
+scans over the array's offsets and UTF-8 buffer
+(``text_kernels.scan_words`` / ``rows_with``); the two RE2 normalization
+regexes run only on the few spans that hold a ``\r`` or a newline run
+(a few % of the benchmark corpus), and the trim over the whole array; the
+block-fusion classifier is numpy over primitive arrays, and the output
+list array is rebuilt from offsets.
 
-Per-row Python survives in exactly one place: anchor-content word
-counting (Python ``findall``) for the ~15 % of spans that contain ``<a``
-(RE2 kernels cannot extract *all* group matches); everything else is
-columnar.
+Python strings exist only for the spans that contain ``<a`` (~15 %):
+``re.findall`` pulls out their anchor contents (no Arrow kernel returns
+*all* group matches), which are then word-counted in one byte scan.
 
 This is the production extraction path: ``entry()``, ``convert_batch``
 and the registry's extraction queries all run it. Each Spark
@@ -39,14 +43,11 @@ from ktpm___ocr_spark.oracle import (
     ANCHOR_RE_PATTERN,
     CURR_LINK_DENSITY_MAX,
     PREV_LINK_DENSITY_MAX,
-    WORD_RE_PATTERN,
 )
+from ktpm___ocr_spark.operators.text_kernels import rows_with, scan_words
 from ktpm___ocr_spark.textnorm import _WS_CHARS
 
 __all__ = ["extract_arrow_native"]
-
-# WORD_RE_PATTERN (\S+) for RE2, with the Java/oracle whitespace set
-_WORD_RE2 = f"[^{_WS_CHARS}]+"
 
 
 def extract_arrow_native(
@@ -55,6 +56,7 @@ def extract_arrow_native(
     if boilerplate not in ("drop", "relabel"):
         raise ValueError(f"unknown boilerplate mode {boilerplate!r}")
     collapse_pat = r"\n{2,}" if variant == "pdf" else r"\n{3,}"
+    trigger = b"\n\n" if variant == "pdf" else b"\n\n\n"
     if variant not in ("pdf", "txt"):
         raise ValueError(f"unknown variant {variant!r}")
     relabel = boilerplate == "relabel"
@@ -66,7 +68,6 @@ def extract_arrow_native(
 
         # ASCII-pinned like the other paths (textnorm.py)
         anchor_re = re.compile(ANCHOR_RE_PATTERN, re.ASCII)
-        word_re = re.compile(WORD_RE_PATTERN, re.ASCII)
 
         for batch in batches:
             n_rows = batch.num_rows
@@ -105,30 +106,39 @@ def extract_arrow_native(
                 pc.fill_null(pc.equal(kind, "media"), False)
             ).astype(bool)
 
-            # ---- normalization: two RE2 passes + a trim over ONE array
-            norm = pc.replace_substring_regex(text, pattern=r"\r\n?", replacement="\n")
-            norm = pc.replace_substring_regex(norm, pattern=collapse_pat, replacement="\n\n")
+            # ---- normalization: the two RE2 passes run only on spans
+            # that hold a \r or the collapse trigger (a few %); a trim
+            # over ONE array
+            fix = pa.array(rows_with(text, b"\r") | rows_with(text, trigger))
+            norm = text
+            if fix.true_count:
+                sub = text.filter(fix)
+                sub = pc.replace_substring_regex(sub, pattern=r"\r\n?", replacement="\n")
+                sub = pc.replace_substring_regex(sub, pattern=collapse_pat, replacement="\n\n")
+                norm = pc.replace_with_mask(text, fix, sub)
             norm = pc.utf8_trim(norm, characters=_WS_CHARS)
             # media spans carry no text; text spans carry no media_ref
             media_pa = pa.array(media)
             norm = pc.if_else(media_pa, pa.nulls(n_spans, pa.string()), norm)
             mref = pc.if_else(media_pa, mref, pa.nulls(n_spans, pa.string()))
 
-            # ---- features: C++ word count; Python only for anchor spans
-            words = np.asarray(
-                pc.fill_null(pc.count_substring_regex(norm, pattern=_WORD_RE2), 0),
-                dtype=np.int64,
+            # ---- features: byte-scan word count; Python only for the
+            # anchor spans
+            words, _ = scan_words(norm, words=False)
+            anchor_idx = np.flatnonzero(rows_with(norm, b"<a"))
+            # each anchor span's anchor contents, word-counted in one scan
+            inner = [
+                anchor_re.findall(t)
+                for t in norm.take(pa.array(anchor_idx)).to_pylist()
+            ]
+            inner_words, _ = scan_words(
+                pa.array([m for ms in inner for m in ms], pa.string()),
+                words=False,
             )
-            has_anchor = np.asarray(
-                pc.fill_null(pc.match_substring(norm, "<a"), False)
-            ).astype(bool)
-            link_words = np.zeros(n_spans, dtype=np.int64)
-            if has_anchor.any():
-                norm_py = norm.to_pylist()
-                for j in np.flatnonzero(has_anchor):
-                    link_words[j] = sum(
-                        len(word_re.findall(m)) for m in anchor_re.findall(norm_py[j])
-                    )
+            n_inner = np.array([len(ms) for ms in inner], dtype=np.int64)
+            link_words = np.bincount(
+                np.repeat(anchor_idx, n_inner), weights=inner_words, minlength=n_spans
+            )
             ld = np.where(words > 0, link_words / np.maximum(words, 1), 0.0)
 
             # ---- block fusion via shifts + doc-boundary fixups

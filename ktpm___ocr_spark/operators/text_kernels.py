@@ -28,6 +28,14 @@ HALF_UP ``round(_, 4)`` boundary semantics. Equivalence is pinned by
 tests/test_text_kernels.py (fixture corpus + adversarial boundary
 rows), not by claim.
 
+Every text kernel here, and the extraction kernel, takes its words from
+one byte scan, :func:`scan_words`: the runs of non-``_WS_CHARS`` bytes
+found from a string array's offsets and UTF-8 buffer, in bounded steps,
+returned as per-row counts and one compacted ``StringArray``
+(tests/test_word_scan.py pins it to RE2, ``oracle.word_count`` and
+:func:`_words`). The vocabulary is then lowered once per batch in Python
+(:func:`_lowered_codes`), so per-word work is numpy over int codes.
+
 Every Python task pays a fixed start cost, whatever it computes. On a
 4-vCPU host with Python 3.11.7 a no-op ``mapInArrow`` over 32 partitions
 took 1.65–3.8 s against 0.30–0.35 s over 4. The cost sits in
@@ -91,6 +99,195 @@ def _words(text: str | None) -> list[str]:
     return [w for w in _SPLIT_RE.split(text.lower()) if w]
 
 
+# ---------------------------------------------------------------------------
+# Byte-level word scan
+# ---------------------------------------------------------------------------
+
+# Text bytes per scan step: bounds the scan's byte masks (a few bytes of
+# transient per text byte) whatever the batch size; a longer row is one step.
+_SCAN_BYTES = 1 << 20
+
+
+def _ws_bytes(b):
+    """Bool mask of the ``_WS_CHARS`` bytes (0x09–0x0D and 0x20) in the
+    uint8 array ``b``: two compares over the bytes, ~3× faster than a
+    256-entry lookup-table gather (pinned to ``_WS_CHARS`` by
+    tests/test_word_scan.py)."""
+    import numpy as np
+
+    return (b == 32) | ((b - np.uint8(9)) < 5)
+
+
+def _string_buffers(texts):
+    """``(offs, data)``: a pyarrow string array's row offsets (int64,
+    ``n + 1``, slice offset applied) and its UTF-8 data buffer (uint8),
+    both zero-copy views. A null row that owns bytes (Arrow allows it)
+    is rewritten to ``""`` first, so no scan sees bytes under a null."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(texts, pa.ChunkedArray):
+        texts = texts.combine_chunks()
+    n = len(texts)
+    if n == 0:
+        return np.zeros(1, dtype=np.int64), np.zeros(0, dtype=np.uint8)
+    off_t = np.int64 if pa.types.is_large_string(texts.type) else np.int32
+    bufs = texts.buffers()
+    offs = np.frombuffer(
+        bufs[1], off_t, n + 1, texts.offset * np.dtype(off_t).itemsize
+    ).astype(np.int64)
+    if texts.null_count and (
+        np.diff(offs)[~np.asarray(texts.is_valid())] > 0
+    ).any():
+        return _string_buffers(pc.fill_null(texts, ""))
+    if bufs[2] is None:
+        return offs, np.zeros(0, dtype=np.uint8)
+    return offs, np.frombuffer(bufs[2], np.uint8)
+
+
+def _row_steps(offs, step: int):
+    """``(r0, r1)`` row ranges covering every row of the row offsets
+    ``offs``, each ending on the first row boundary after it holds
+    ``step`` units: the scans below work one range at a time, so their
+    transient arrays stay bounded."""
+    import numpy as np
+
+    marks = np.arange(offs[0], offs[-1], step)
+    cuts = np.unique(
+        np.r_[0, np.searchsorted(offs, marks, "right") - 1, len(offs) - 1]
+    )
+    return zip(cuts[:-1].tolist(), cuts[1:].tolist())
+
+
+def rows_with(texts, needle: bytes):
+    """numpy bool mask: which rows of a pyarrow string array contain the
+    byte string ``needle`` (``pc.match_substring`` with nulls → False),
+    found by byte compares over the data buffer."""
+    import numpy as np
+
+    offs, data = _string_buffers(texts)
+    hit = np.zeros(len(offs) - 1, dtype=bool)
+    k = len(needle)
+    for r0, r1 in _row_steps(offs, _SCAN_BYTES):
+        lo = offs[r0]
+        b = data[lo : offs[r1]]
+        m = max(len(b) - k + 1, 0)
+        at = b[:m] == needle[0]
+        for j in range(1, k):
+            at &= b[j : j + m] == needle[j]
+        pos = np.flatnonzero(at) + lo
+        row = np.searchsorted(offs, pos, "right") - 1
+        hit[row[pos + k <= offs[row + 1]]] = True
+    return hit
+
+
+def scan_words(texts, words: bool = True):
+    """``(counts, words)`` for a pyarrow string array: per row, the number
+    of maximal runs of non-``_WS_CHARS`` characters (``oracle.word_count``,
+    RE2 ``count_substring_regex([^ws]+)``); and, with ``words``, those runs
+    in row order as one ``StringArray`` (``_words`` without the lower:
+    RE2 ``split_pattern_regex`` minus its empty pieces). Null rows have
+    no words.
+
+    A byte scan over the offsets and UTF-8 data buffer: every byte of a
+    multi-byte UTF-8 character is ≥ 0x80, so no such byte is ASCII
+    whitespace, and the runs of non-whitespace bytes are exactly the runs
+    of non-whitespace characters. Words start where a non-whitespace
+    byte follows whitespace or a row start, and end where one precedes
+    whitespace or a row end. The data is scanned in :func:`_row_steps`.
+    The words' data buffer is the non-whitespace bytes, compacted once;
+    the array is built over it without a copy."""
+    import numpy as np
+    import pyarrow as pa
+
+    offs, data = _string_buffers(texts)
+    counts = np.zeros(len(offs) - 1, dtype=np.int64)
+    lens, body = [], []
+    for r0, r1 in _row_steps(offs, _SCAN_BYTES):
+        lo = offs[r0]
+        b = data[lo : offs[r1]]
+        row_lo = offs[r0:r1] - lo
+        row_hi = offs[r0 + 1 : r1 + 1] - lo
+        nonempty = np.flatnonzero(row_hi > row_lo)
+        if len(nonempty) == 0:
+            continue
+        ws = _ws_bytes(b)
+        # ext[i] = ws[i-1], with a virtual whitespace byte at both ends
+        ext = np.empty(len(b) + 2, dtype=bool)
+        ext[0] = ext[-1] = True
+        ext[1:-1] = ws
+        prev = ext[:-2].copy()
+        prev[row_lo[nonempty]] = True  # a row start follows "whitespace"
+        start = np.less(ws, prev)
+        # rows are contiguous, so the bytes from one non-empty row's
+        # start to the next one's are exactly that row's bytes
+        counts[r0 + nonempty] = np.add.reduceat(
+            start.view(np.int8), row_lo[nonempty], dtype=np.int64
+        )
+        if words:
+            nxt = ext[2:].copy()
+            nxt[row_hi[nonempty] - 1] = True  # and a row end precedes it
+            end = np.flatnonzero(np.less(ws, nxt)) + 1
+            lens.append(end - np.flatnonzero(start))
+            body.append(b[~ws])
+    if not words:
+        return counts, None
+    n_words = int(counts.sum())
+    woffs = np.zeros(n_words + 1, dtype=np.int64)
+    if n_words:
+        np.cumsum(np.concatenate(lens), out=woffs[1:])
+    large = woffs[-1] > np.iinfo(np.int32).max
+    woffs = woffs if large else woffs.astype(np.int32)
+    data_out = np.concatenate(body) if body else np.zeros(0, np.uint8)
+    return counts, pa.Array.from_buffers(
+        pa.large_string() if large else pa.string(),
+        n_words,
+        [None, pa.py_buffer(woffs), pa.py_buffer(data_out)],
+    )
+
+
+def _lowered_codes(words):
+    """``(codes, vocab)``: each word's int64 index into ``vocab``, the
+    batch's distinct LOWERED spellings (a ``StringArray``).
+
+    Lowering runs in Python over the raw vocabulary only. pc.utf8_lower
+    is utf8proc's SIMPLE per-codepoint mapping, while Spark's lower() is
+    Java full case mapping (İ → 'i'+U+0307, final sigma, …); Python
+    str.lower() matches Java on every divergent case (probed: İN, ΟΔΟΣ,
+    ΣΣ, ẞ, ǅ…). Case mapping never creates or destroys whitespace, so
+    split-then-lower ≡ the expression's lower-then-split, and per-token
+    lowering keeps the Final_Sigma context: token boundaries are
+    whitespace (uncased) on both sides. Keying on the lowered identity
+    makes distinct raw spellings of one lowered word the same word."""
+    import numpy as np
+    import pyarrow as pa
+
+    raw = words.dictionary_encode()
+    low = pa.array(
+        [w.lower() for w in raw.dictionary.to_pylist()], pa.string()
+    ).dictionary_encode()
+    codes = np.asarray(low.indices, dtype=np.int64)[
+        np.asarray(raw.indices, dtype=np.int64)
+    ]
+    return codes, low.dictionary
+
+
+def _composite_key(cols, base: int):
+    """One int64 key ``((c0·base + c1)·base + c2)…`` per row of the
+    non-negative int64 columns ``cols`` (``cols[1:]`` each < ``base``),
+    or None when the largest key would not fit in int64: then the caller
+    falls back to a multi-column sort."""
+    c0 = cols[0]
+    lead = int(c0.max()) + 1 if len(c0) else 1
+    if lead * base ** (len(cols) - 1) > 1 << 63:
+        return None
+    key = c0
+    for c in cols[1:]:
+        key = key * base + c
+    return key
+
+
 def _shingle_bytes(ws: list[str], n: int = _SHINGLE_N) -> list[bytes]:
     """Distinct word n-gram shingles (utf-8); short texts fall back to
     one whole-text shingle — dedup.shingles semantics exactly
@@ -100,6 +297,80 @@ def _shingle_bytes(ws: list[str], n: int = _SHINGLE_N) -> list[bytes]:
     else:
         sh = {" ".join(ws)}
     return [s.encode("utf-8") for s in sh]
+
+
+def _minhash_signatures(texts, salts, chunk_shingles: int = 1 << 21):
+    """(rows × k) uint64 minhash signatures of a pyarrow string array:
+    per row and salt, ``min(h(shingle) ^ salt)`` over the row's distinct
+    shingles (``_shingle_bytes(_words(text))``), where ``h`` is the first
+    8 bytes of sha256 big-endian shifted right 4 bits.
+
+    Columnar per chunk of rows: the words come from :func:`scan_words`
+    keyed on the lowered vocabulary (:func:`_lowered_codes`); each 3-gram
+    is a code triple, packed into one int64 key when the vocabulary
+    allows (else the triples are sorted as rows), so ``sha256`` runs
+    once per chunk-distinct shingle over the joined lowered words. Rows
+    with fewer than 3 words keep the whole-text shingle (``''`` for none).
+    Repeats of a shingle within a row need no dedup: min is idempotent.
+    The per-row min runs per salt as ``minimum.reduceat(H ^ salt)`` at
+    row starts, so no (shingles × k) matrix exists. Chunks end at row
+    boundaries once they hold ``chunk_shingles`` shingles, which bounds
+    the per-shingle arrays of a batch of mega-docs."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = _SHINGLE_N
+    sha = hashlib.sha256
+    n_rows = len(texts)
+    counts, words = scan_words(texts)
+    codes, vocab = _lowered_codes(words)
+    vb = [w.encode("utf-8") for w in vocab.to_pylist()]
+    u = max(len(vb), 1)
+    n_sh = np.where(counts >= n, counts - (n - 1), 1)
+    row_w = np.r_[0, np.cumsum(counts)]
+    row_sh = np.r_[0, np.cumsum(n_sh)]
+    sig = np.empty((n_rows, len(salts)), dtype=np.uint64)
+
+    def h(shingles) -> "np.ndarray":
+        """uint64 hashes of a list of shingle bytes."""
+        dig = b"".join([sha(s).digest()[:8] for s in shingles])
+        return np.frombuffer(dig, dtype=">u8").astype(np.uint64) >> np.uint64(4)
+
+    for r0, r1 in _row_steps(row_sh, chunk_shingles):
+        c = codes[row_w[r0] : row_w[r1]]
+        cnt = counts[r0:r1]
+        # a 3-gram starts at word i iff words i..i+2 are in i's row
+        row_end = np.repeat(np.cumsum(cnt), cnt)
+        at = np.flatnonzero(np.arange(len(c)) + (n - 1) < row_end)
+        grams = [c[at + j] for j in range(n)]
+        key = _composite_key(grams, u)
+        if key is not None:
+            uniq, inv = np.unique(key, return_inverse=True)
+            parts = [(uniq // u ** (n - 1 - j)) % u for j in range(n)]
+        else:
+            rows, inv = np.unique(np.stack(grams, 1), axis=0, return_inverse=True)
+            parts = [rows[:, j] for j in range(n)]
+        # the distinct shingles' bytes: lowered words joined by " "
+        uh = h(
+            pc.binary_join_element_wise(
+                *[vocab.take(pa.array(p)) for p in parts], " "
+            ).cast(pa.binary()).to_pylist()
+        )
+        # every row has ≥ 1 shingle, so reduceat segments are non-empty
+        starts = row_sh[r0:r1] - row_sh[r0]
+        short = np.flatnonzero(cnt < n)
+        hs = np.empty(row_sh[r1] - row_sh[r0], dtype=np.uint64)
+        tri = np.ones(len(hs), dtype=bool)
+        tri[starts[short]] = False
+        hs[tri] = uh[inv.ravel()]
+        hs[starts[short]] = h([
+            b" ".join(vb[i] for i in codes[row_w[r] : row_w[r + 1]].tolist())
+            for r in (short + r0).tolist()
+        ])
+        for j, salt in enumerate(salts):
+            sig[r0:r1, j] = np.minimum.reduceat(hs ^ salt, starts)
+    return sig
 
 
 def lsh_bands_arrow(
@@ -113,21 +384,20 @@ def lsh_bands_arrow(
     """(id, band_idx, band_hash) — bit-identical to the expression
     ``lsh_bands`` (dedup.py), computed in one Arrow pass.
 
-    Per row: tokenize once, build the distinct shingle set once, ONE
-    sha256 per shingle (the measured floor of the old k-sha definition
-    was ~16× this — dedup.py module docstring), then the k xor-mixes and
-    per-doc mins run as TWO numpy passes over the whole batch:
-    ``bitwise_xor.outer(H, salts)`` and ``minimum.reduceat`` at doc
-    starts — no per-doc Python in the mixing. ``digest()[:8]`` big-endian
-    shifted right 4 bits == the first 15 hex chars parsed as int64, the
-    same value both Catalyst (``conv(substring(sha2,1,15),16,10)``) and
-    DuckDB (``('0x' || substr(sha256,1,15))::BIGINT``) compute. The band
-    hash is ``substr(sha256(concat_ws(0x1f, decimal-strings)), 1, 16)``,
+    Per batch, :func:`_minhash_signatures` hashes each batch-distinct
+    shingle once (the measured floor of the old k-sha definition was
+    ~16× one sha per shingle — dedup.py module docstring) and takes the
+    per-row mins per salt in numpy, bounded by ``chunk_shingles``
+    shingles per step. ``digest()[:8]`` big-endian shifted right 4 bits
+    == the first 15 hex chars parsed as int64, the same value both
+    Catalyst (``conv(substring(sha2,1,15),16,10)``) and DuckDB
+    (``('0x' || substr(sha256,1,15))::BIGINT``) compute. The band hash is
+    ``substr(sha256(concat_ws(0x1f, decimal-strings)), 1, 16)``,
     identical across all three formulations.
 
     Scale shape: embarrassingly parallel projection + explode (bands
     rows out per doc); no shuffle here — the consumer's band-bucket
-    equi-join is where the one shuffle lives, same as before.
+    aggregation is where the one shuffle lives.
     """
     from ktpm___ocr_spark.operators.dedup import MINHASH_PERM_SALTS
 
@@ -154,71 +424,25 @@ def lsh_bands_arrow(
         import numpy as np
         import pyarrow as pa
 
-        salts = np.array(MINHASH_PERM_SALTS[:k], dtype=np.uint64)
-        # flush the xor/reduceat pass at doc boundaries once a chunk
-        # holds ~2M shingles: Arrow batches are capped by ROWS, not
-        # bytes, so a batch of mega-docs would otherwise materialize an
-        # unbounded (total_shingles × k) xor matrix (and an equally
-        # unbounded Python hash list). Chunking bounds the transient at
-        # ~(2M + one doc's shingles) × k × 8 B ≈ 256 MB per worker,
-        # with per-chunk results bit-identical (reduceat segments are
-        # whole docs either way).
-        chunk_cap = chunk_shingles
+        salts = [np.uint64(s) for s in MINHASH_PERM_SALTS[:k]]
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            sig_parts: list["np.ndarray"] = []
-            hashes: list[int] = []
-            starts: list[int] = []
-
-            def _flush():
-                # (n_shingles, k) xor matrix → per-doc column mins;
-                # every doc has ≥ 1 shingle (empty text ⇒ the ''
-                # shingle), so reduceat segments are always non-empty
-                sig_parts.append(
-                    np.minimum.reduceat(
-                        np.bitwise_xor.outer(
-                            np.array(hashes, dtype=np.uint64), salts
-                        ),
-                        np.array(starts, dtype=np.int64),
-                        axis=0,
-                    )
-                )
-                hashes.clear()
-                starts.clear()
-
-            for t in texts:
-                starts.append(len(hashes))
-                hashes.extend(
-                    int.from_bytes(sha(s).digest()[:8], "big") >> 4
-                    for s in _shingle_bytes(_words(t))
-                )
-                if len(hashes) >= chunk_cap:
-                    _flush()
-            if starts:
-                _flush()
-            sig = (
-                np.vstack(sig_parts) if len(sig_parts) > 1 else sig_parts[0]
-            )
-            take_idx: list[int] = []
-            bidx: list[int] = []
-            bhash: list[str] = []
-            for row_i, sig_row in enumerate(sig.tolist()):
-                for b in range(bands):
-                    seg = "\x1f".join(
-                        map(str, sig_row[b * rows : (b + 1) * rows])
-                    )
-                    take_idx.append(row_i)
-                    bidx.append(b)
-                    bhash.append(
-                        sha(seg.encode("utf-8")).hexdigest()[:_BAND_HEX]
-                    )
+            sig = _minhash_signatures(batch.column(1), salts, chunk_shingles)
+            bhash = [
+                sha(
+                    "\x1f".join(map(str, sig_row[b * rows : (b + 1) * rows]))
+                    .encode("utf-8")
+                ).hexdigest()[:_BAND_HEX]
+                for sig_row in sig.tolist()
+                for b in range(bands)
+            ]
             yield pa.RecordBatch.from_arrays(
                 [
-                    ids.take(pa.array(take_idx, type=pa.int32())),
-                    pa.array(bidx, type=pa.int32()),
+                    batch.column(0).take(
+                        pa.array(np.repeat(np.arange(batch.num_rows), bands))
+                    ),
+                    pa.array(np.tile(np.arange(bands), batch.num_rows), pa.int32()),
                     pa.array(bhash, type=pa.string()),
                 ],
                 names=[id_col, "band_idx", "band_hash"],
@@ -243,91 +467,74 @@ _TOP_WORD_LT = 0.30005  # round4(f) <= 0.30
 _TOP_BIGRAM_LT = 0.18005  # round4(f) <= 0.18
 
 
+def _max_multiplicity(docs, cols, base: int, n_rows: int):
+    """Per-doc max multiplicity of the key tuple ``cols`` (int64 columns,
+    each < ``base``) among the positions of doc ``docs`` — the run-length
+    form of _top_frac_inrow's sort+fold, vectorized. Sorts one composite
+    int64 key ``doc·base^len(cols) + …`` when it fits, else lexsorts the
+    columns (the same runs either way)."""
+    import numpy as np
+
+    best = np.zeros(n_rows, dtype=np.int64)
+    if len(docs) == 0:
+        return best
+    key = _composite_key([docs, *cols], base)
+    if key is not None:
+        key = np.sort(key)
+        brk = key[1:] != key[:-1]
+        sd = key // base ** len(cols)
+    else:
+        order = np.lexsort((*cols[::-1], docs))
+        sd = docs[order]
+        brk = sd[1:] != sd[:-1]
+        for c in cols:
+            sc = c[order]
+            brk |= sc[1:] != sc[:-1]
+    run_start = np.flatnonzero(np.r_[True, brk])
+    run_len = np.diff(np.r_[run_start, len(sd)])
+    run_doc = sd[run_start]
+    grp_start = np.flatnonzero(np.r_[True, run_doc[1:] != run_doc[:-1]])
+    best[run_doc[grp_start]] = np.maximum.reduceat(run_len, grp_start)
+    return best
+
+
 def _gopher_keep_mask(texts):
     """numpy bool mask of gopher_keep_expr decisions for a pyarrow
-    string array — fully columnar (RE2 split + dictionary-encode mode
-    counting; no per-row Python)."""
+    string array — fully columnar (byte word scan + lowered-vocabulary
+    codes + sorted-key mode counting; no per-row Python)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    n_rows = len(texts)
-    # split the RAW text; lowercase only the (small) vocabulary in
-    # Python below. pc.utf8_lower is utf8proc's SIMPLE per-codepoint
-    # mapping, while Spark's lower() is Java full case mapping (İ →
-    # 'i'+U+0307, final sigma, …) — Python str.lower() matches Java on
-    # every divergent case (probed: İN, ΟΔΟΣ, ΣΣ, ẞ, ǅ…), and case
-    # mapping never creates or destroys whitespace, so split-then-lower
-    # ≡ the expression's lower-then-split. Per-token lowering also
-    # preserves the Final_Sigma context: token boundaries are whitespace
-    # (uncased) on both sides.
-    wl_list = pc.split_pattern_regex(
-        pc.fill_null(texts, ""), pattern=_WS_CLASS + "+"
-    )
-    if isinstance(wl_list, pa.ChunkedArray):
-        wl_list = wl_list.combine_chunks()
-    offsets = np.asarray(wl_list.offsets, dtype=np.int64)
-    offsets = offsets - offsets[0]
-    flat = wl_list.flatten()
-    rawlen = np.asarray(pc.utf8_length(flat), dtype=np.int64)
-    doc_idx = np.repeat(np.arange(n_rows, dtype=np.int64), np.diff(offsets))
-    nonempty = rawlen > 0  # split artifacts ('' around separators) drop
-    doc_idx = doc_idx[nonempty]
-    flat = flat.filter(pa.array(nonempty))
-
     from ktpm___ocr_spark.functions.textstats import EN_STOPWORDS
 
-    dic = flat.dictionary_encode()
-    raw_codes = np.asarray(dic.indices, dtype=np.int64)
-    lowered = [w.lower() for w in dic.dictionary.to_pylist()]
-    # re-key on the LOWERED identity: distinct raw spellings of one
-    # lowered word must count as the same word for the mode/bigram gates
-    uniq, inv = np.unique(np.array(lowered, dtype=object), return_inverse=True)
-    codes = inv[raw_codes]
-    low_len = np.fromiter(
-        (len(w) for w in lowered), dtype=np.int64, count=len(lowered)
-    )
-    wlen = low_len[raw_codes]  # full mapping can change codepoint count
+    n_rows = len(texts)
+    n, words = scan_words(texts)
+    doc_idx = np.repeat(np.arange(n_rows, dtype=np.int64), n)
+    codes, vocab = _lowered_codes(words)
+    # full mapping can change codepoint count: lengths of LOWERED words
+    wlen = np.asarray(pc.utf8_length(vocab), dtype=np.int64)[codes]
 
-    n = np.bincount(doc_idx, minlength=n_rows).astype(np.int64)
     sum_len = np.bincount(doc_idx, weights=wlen, minlength=n_rows)
     safe_n = np.maximum(n, 1).astype(np.float64)
     mean_len = sum_len / safe_n  # n==0 rows fail the length gate anyway
 
-    stopset = set(EN_STOPWORDS)
-    is_stop = np.fromiter(
-        (w in stopset for w in uniq), dtype=np.float64, count=len(uniq)
+    is_stop = np.asarray(
+        pc.is_in(vocab, value_set=pa.array(EN_STOPWORDS, pa.string())),
+        dtype=np.float64,
     )
     n_stop = np.bincount(doc_idx, weights=is_stop[codes], minlength=n_rows)
     stop_ratio = n_stop / safe_n
 
-    def _max_multiplicity(keys: "np.ndarray", docs: "np.ndarray"):
-        """per-doc max multiplicity of (doc, key) — the run-length form
-        of _top_frac_inrow's sort+fold, vectorized."""
-        best = np.zeros(n_rows, dtype=np.int64)
-        if len(keys) == 0:
-            return best
-        order = np.lexsort((keys, docs))
-        sk, sd = keys[order], docs[order]
-        run_start = np.flatnonzero(
-            np.r_[True, (sd[1:] != sd[:-1]) | (sk[1:] != sk[:-1])]
-        )
-        run_len = np.diff(np.r_[run_start, len(sk)])
-        run_doc = sd[run_start]
-        grp_start = np.flatnonzero(np.r_[True, run_doc[1:] != run_doc[:-1]])
-        best[run_doc[grp_start]] = np.maximum.reduceat(run_len, grp_start)
-        return best
+    u = len(vocab)
+    top_word = _max_multiplicity(doc_idx, [codes], u, n_rows) / safe_n
 
-    top_word = _max_multiplicity(codes, doc_idx) / safe_n
-
-    same_doc = doc_idx[:-1] == doc_idx[1:] if len(codes) else np.array([], bool)
-    u = len(uniq) + 1
-    bi_keys = (codes[:-1] * u + codes[1:])[same_doc] if len(codes) else codes
-    bi_docs = doc_idx[:-1][same_doc] if len(codes) else doc_idx
+    same_doc = doc_idx[:-1] == doc_idx[1:]
+    bi_cols = [codes[:-1][same_doc], codes[1:][same_doc]]
     n_bi = np.maximum(n - 1, 0)
-    top_bigram = _max_multiplicity(bi_keys, bi_docs) / np.maximum(
-        n_bi, 1
-    ).astype(np.float64)
+    top_bigram = _max_multiplicity(
+        doc_idx[:-1][same_doc], bi_cols, u, n_rows
+    ) / np.maximum(n_bi, 1).astype(np.float64)
 
     return (
         (n >= 10)
@@ -407,9 +614,9 @@ def hashed_bow_embedding_arrow(
     real semantic-dup signal with no birthday-paradox artifacts at
     10^6 docs.
 
-    Columnar per batch: one RE2 split, dictionary-encode, crc32 over the
-    VOCABULARY only (unique words), numpy scatter-add into the
-    (rows × dim) count matrix. Zero-word docs keep the zero vector.
+    Columnar per batch: one byte word scan (:func:`scan_words`),
+    dictionary-encode, crc32 over the lowered VOCABULARY only (unique
+    words), numpy scatter-add into the (rows × dim) count matrix. Zero-word docs keep the zero vector.
     """
     import pyarrow as pa  # noqa: F401 (schema types)
     from pyspark.sql.types import ArrayType, DoubleType
@@ -427,43 +634,24 @@ def hashed_bow_embedding_arrow(
 
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for batch in batches:
             n_rows = batch.num_rows
             if n_rows == 0:
                 continue
-            texts = batch.column(1)
-            # split RAW text, lowercase only the vocabulary in Python:
-            # utf8_lower is the simple case mapping, Python str.lower()
-            # matches Spark lower()'s Java full mapping (see
-            # _gopher_keep_mask) — raw spellings of one lowered word
-            # hash to the same crc32 bucket, so no re-keying is needed
-            wl = pc.split_pattern_regex(
-                pc.fill_null(texts, ""), pattern=_WS_CLASS + "+"
-            )
-            if isinstance(wl, pa.ChunkedArray):
-                wl = wl.combine_chunks()
-            offsets = np.asarray(wl.offsets, dtype=np.int64)
-            offsets = offsets - offsets[0]
-            flat = wl.flatten()
-            wlen = np.asarray(pc.utf8_length(flat), dtype=np.int64)
-            doc_idx = np.repeat(
-                np.arange(n_rows, dtype=np.int64), np.diff(offsets)
-            )
-            keep = wlen > 0
-            doc_idx = doc_idx[keep]
-            dic = flat.filter(pa.array(keep)).dictionary_encode()
-            codes = np.asarray(dic.indices, dtype=np.int64)
-            vocab = dic.dictionary.to_pylist()
+            counts, words = scan_words(batch.column(1))
+            doc_idx = np.repeat(np.arange(n_rows, dtype=np.int64), counts)
+            # raw spellings of one lowered word share a code, hence a
+            # crc32 bucket (Python lower = Spark's full case mapping)
+            codes, vocab = _lowered_codes(words)
             vb = np.fromiter(
-                (zlib.crc32(w.lower().encode("utf-8")) % dim for w in vocab),
+                (zlib.crc32(w.encode("utf-8")) % dim for w in vocab.to_pylist()),
                 dtype=np.int64,
                 count=len(vocab),
             )
-            m = np.zeros((n_rows, dim), dtype=np.float64)
-            if len(codes):
-                np.add.at(m, (doc_idx, vb[codes]), 1.0)
+            m = np.bincount(
+                doc_idx * dim + vb[codes], minlength=n_rows * dim
+            ).astype(np.float64).reshape(n_rows, dim)
             nonzero = m.any(axis=1)
             m[nonzero] -= m[nonzero].mean(axis=1, keepdims=True)
             nrm = np.linalg.norm(m, axis=1, keepdims=True)

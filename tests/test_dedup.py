@@ -295,6 +295,28 @@ def test_connected_components_100_node_chain_round_boundary(spark):
             connected_components(df, max_iter=6)
 
 
+def test_connected_components_random_graph_default_budget(spark):
+    """A random graph of 270 edges over ids 0..599 converges inside the
+    default 15 rounds (hooking: 5; pointer jumping alone needed 16) and
+    labels every node with its union-find component minimum."""
+    import random
+
+    rng = random.Random(3)
+    edges = [(rng.randrange(600), rng.randrange(600)) for _ in range(270)]
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    assert _cc(spark, edges) == {x: find(x) for x in parent}
+
+
 def test_incremental_near_dups_probes_persisted_band_table(spark, tmp_path, docs):
     """The production cross-snapshot path: the old corpus's bands are
     built ONCE, written to parquet, and a later increment probes the

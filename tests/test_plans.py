@@ -101,6 +101,35 @@ def test_lsh_band_join_is_shuffle_not_cartesian(spark, sf01_dir):
     assert _banding_kernels(plan) == 1, plan
 
 
+def test_near_dup_join_back_reads_texts_as_passed(spark, sf01_dir):
+    """Only the banding input is repartitioned by id: the text join-back
+    reads the caller's input as passed, so the texts are not shuffled by
+    id a second and third time for it."""
+    from ktpm___ocr_spark.operators.dedup import (
+        containment_pairs,
+        incremental_near_dups,
+        lsh_bands,
+        minhash_near_dups,
+    )
+
+    docs = spark.read.parquet(f"{sf01_dir}/documents.parquet")
+    old, new = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
+    # the lazy incremental plan reads the increment's bands twice (the
+    # new-old probe and the new-new pairs), each behind its repartition
+    for df, repartitions in (
+        (minhash_near_dups(docs, "doc_id", "text"), 1),
+        (containment_pairs(docs, "doc_id", "text"), 1),
+        (
+            incremental_near_dups(
+                lsh_bands(old, "doc_id", "text"), old, new, eager=False
+            ),
+            2,
+        ),
+    ):
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+        assert analyzed.count("RepartitionByExpression") == repartitions, analyzed
+
+
 def test_ann_broadcast_queries_no_shuffle_of_corpus(spark, sf01_dir):
     df = em.queries()["ann_topk_bruteforce"](spark, sf01_dir)
     plan = _plan(df)
