@@ -4,13 +4,12 @@ The purest form of the input_hint's "vectorized pandas/Arrow UDFs, no
 per-row Python": record batches flow Spark→Arrow with zero conversion,
 and every step runs over the *flattened* span child arrays (one
 contiguous string array for the whole batch — never per-row). Word
-counts and the ``\r`` / newline-run / ``<a`` containment tests are byte
-scans over the array's offsets and UTF-8 buffer
-(``text_kernels.scan_words`` / ``rows_with``); the two RE2 normalization
-regexes run only on the few spans that hold a ``\r`` or a newline run
-(a few % of the benchmark corpus), and the trim over the whole array; the
-block-fusion classifier is numpy over primitive arrays, and the output
-list array is rebuilt from offsets.
+counts are a byte scan over the array's offsets and UTF-8 buffer
+(``text_kernels.scan_words``); the two RE2 normalization regexes run only
+on the few spans that hold a ``\r`` or a newline run (a few % of the
+benchmark corpus, found by ``match_substring``), and the trim over the
+whole array; the block-fusion classifier is numpy over primitive arrays,
+and the output list array is rebuilt from offsets.
 
 Python strings exist only for the spans that contain ``<a`` (~15 %):
 ``re.findall`` pulls out their anchor contents (no Arrow kernel returns
@@ -44,7 +43,7 @@ from ktpm___ocr_spark.oracle import (
     CURR_LINK_DENSITY_MAX,
     PREV_LINK_DENSITY_MAX,
 )
-from ktpm___ocr_spark.operators.text_kernels import rows_with, scan_words
+from ktpm___ocr_spark.operators.text_kernels import scan_words
 from ktpm___ocr_spark.textnorm import _WS_CHARS
 
 __all__ = ["extract_arrow_native"]
@@ -56,7 +55,7 @@ def extract_arrow_native(
     if boilerplate not in ("drop", "relabel"):
         raise ValueError(f"unknown boilerplate mode {boilerplate!r}")
     collapse_pat = r"\n{2,}" if variant == "pdf" else r"\n{3,}"
-    trigger = b"\n\n" if variant == "pdf" else b"\n\n\n"
+    trigger = "\n\n" if variant == "pdf" else "\n\n\n"
     if variant not in ("pdf", "txt"):
         raise ValueError(f"unknown variant {variant!r}")
     relabel = boilerplate == "relabel"
@@ -109,7 +108,13 @@ def extract_arrow_native(
             # ---- normalization: the two RE2 passes run only on spans
             # that hold a \r or the collapse trigger (a few %); a trim
             # over ONE array
-            fix = pa.array(rows_with(text, b"\r") | rows_with(text, trigger))
+            fix = pc.fill_null(
+                pc.or_(
+                    pc.match_substring(text, "\r"),
+                    pc.match_substring(text, trigger),
+                ),
+                False,
+            )
             norm = text
             if fix.true_count:
                 sub = text.filter(fix)
@@ -125,7 +130,9 @@ def extract_arrow_native(
             # ---- features: byte-scan word count; Python only for the
             # anchor spans
             words, _ = scan_words(norm, words=False)
-            anchor_idx = np.flatnonzero(rows_with(norm, b"<a"))
+            anchor_idx = np.flatnonzero(
+                np.asarray(pc.fill_null(pc.match_substring(norm, "<a"), False))
+            )
             # each anchor span's anchor contents, word-counted in one scan
             inner = [
                 anchor_re.findall(t)

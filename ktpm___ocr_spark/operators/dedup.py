@@ -775,18 +775,16 @@ def connected_components(
     one canonical document is kept — the actual dedup action on a corpus.
 
     Algorithm: min-label propagation with hooking. Every node starts
-    with ``min(self, min(neighbors))``. Each round, every edge (u, v)
-    sends ``label(u)`` to v and to the node ``label(v)`` (the hook: the
-    label roots of two touching trees link directly), each node takes the
-    min of its label and what it received, and a pointer-jumping step
-    (label ← min(label, label's label), Shiloach–Vishkin path halving)
-    shortens the label paths; fixpoint = component minimum. The joins
-    and the groupBy of a round are keyed on node id (uniform,
-    AQE-splittable). Pointer jumping alone only shortens paths through
-    label nodes, so on general graphs the rounds grew with the diameter
-    (a 270-edge random graph over 600 ids needed 16); with the hook it
-    takes 5, a 2,000-edge graph over 3,000 ids 6 instead of 19, and a
-    100-node chain 7 either way. The alternating
+    with ``min(self, min(neighbors))``. Each round, every node takes the
+    min of its label, its neighbors' labels and (the hook) the neighbor
+    labels of every node it labels, so the label roots of two touching
+    trees link directly; then a pointer-jumping step (label ← min(label,
+    label's label), Shiloach–Vishkin path halving) shortens the label
+    paths. Fixpoint = component minimum. Only the first groupBy reads
+    the edges; the hook and the jump run on node-sized data, and every
+    join and groupBy is keyed on node id (uniform, AQE-splittable). A
+    270-edge random graph over 600 ids converges in 5 rounds and a
+    100-node chain in 7. The alternating
     large-star/small-star algorithm (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC 2014) is the equivalent
     alternative at web scale. Each generation is eagerly ``localCheckpoint``-ed:
@@ -813,38 +811,39 @@ def connected_components(
     )
     try:
         for _ in range(max_iter):
-            # each edge (u, v) sends label(u) to v and, hooking, to
-            # label(v): a component's label roots link to each other in
-            # the same aggregation, not only through the path of nodes
-            lv = labels.select(F.col("u").alias("v"), F.col("label").alias("lv"))
             nbr_min = (
                 edges.join(labels, "u")
-                .join(lv, "v")
-                .select(
-                    F.inline(
-                        F.array(
-                            F.struct(F.col("v").alias("u"), "label"),
-                            F.struct(F.col("lv").alias("u"), "label"),
-                        )
-                    )
-                )
-                .groupBy("u")
+                .groupBy(F.col("v").alias("u"))
                 .agg(F.min("label").alias("nbr_min"))
             )
             # materialized: the pointer-jumping self-join below consumes
             # propagated on BOTH sides — without the checkpoint the
             # edges⋈labels⋈nbr_min subtree re-evaluates once per side,
             # doubling the hot loop's per-round shuffle work (r5 review).
-            # It carries the round's old label for the convergence count.
+            # Each node keeps the min of its label and nbr_min and, the
+            # hook, sends nbr_min to its label root: one aggregation over
+            # node-sized rows. It carries the old label for the count.
+            no_label = F.lit(None).cast(labels.schema["label"].dataType)
             propagated = (
                 labels.join(nbr_min, "u", "left")
                 .select(
-                    "u",
-                    F.least(
-                        F.col("label"), F.coalesce("nbr_min", F.col("label"))
-                    ).alias("label"),
-                    F.col("label").alias("old"),
+                    F.inline(
+                        F.array(
+                            F.struct(
+                                "u",
+                                F.least("label", "nbr_min").alias("label"),
+                                F.col("label").alias("old"),
+                            ),
+                            F.struct(
+                                F.col("label").alias("u"),
+                                F.col("nbr_min").alias("label"),
+                                no_label.alias("old"),
+                            ),
+                        )
+                    )
                 )
+                .groupBy("u")
+                .agg(F.min("label").alias("label"), F.max("old").alias("old"))
                 .localCheckpoint(eager=True)
             )
             _release_checkpoint(labels)  # propagated is materialized

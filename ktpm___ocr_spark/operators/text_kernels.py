@@ -33,8 +33,10 @@ one byte scan, :func:`scan_words`: the runs of non-``_WS_CHARS`` bytes
 found from a string array's offsets and UTF-8 buffer, in bounded steps,
 returned as per-row counts and one compacted ``StringArray``
 (tests/test_word_scan.py pins it to RE2, ``oracle.word_count`` and
-:func:`_words`). The vocabulary is then lowered once per batch in Python
-(:func:`_lowered_codes`), so per-word work is numpy over int codes.
+:func:`_words`). ASCII words are lowered in Arrow and the distinct
+non-ASCII ones in Python (:func:`_lowered`); the gate and the embedding
+key them on the lowered batch vocabulary (:func:`_lowered_codes`), so
+their per-word work is numpy over int codes.
 
 Every Python task pays a fixed start cost, whatever it computes. On a
 4-vCPU host with Python 3.11.7 a no-op ``mapInArrow`` over 32 partitions
@@ -160,28 +162,6 @@ def _row_steps(offs, step: int):
     return zip(cuts[:-1].tolist(), cuts[1:].tolist())
 
 
-def rows_with(texts, needle: bytes):
-    """numpy bool mask: which rows of a pyarrow string array contain the
-    byte string ``needle`` (``pc.match_substring`` with nulls → False),
-    found by byte compares over the data buffer."""
-    import numpy as np
-
-    offs, data = _string_buffers(texts)
-    hit = np.zeros(len(offs) - 1, dtype=bool)
-    k = len(needle)
-    for r0, r1 in _row_steps(offs, _SCAN_BYTES):
-        lo = offs[r0]
-        b = data[lo : offs[r1]]
-        m = max(len(b) - k + 1, 0)
-        at = b[:m] == needle[0]
-        for j in range(1, k):
-            at &= b[j : j + m] == needle[j]
-        pos = np.flatnonzero(at) + lo
-        row = np.searchsorted(offs, pos, "right") - 1
-        hit[row[pos + k <= offs[row + 1]]] = True
-    return hit
-
-
 def scan_words(texts, words: bool = True):
     """``(counts, words)`` for a pyarrow string array: per row, the number
     of maximal runs of non-``_WS_CHARS`` characters (``oracle.word_count``,
@@ -247,26 +227,42 @@ def scan_words(texts, words: bool = True):
     )
 
 
-def _lowered_codes(words):
-    """``(codes, vocab)``: each word's int64 index into ``vocab``, the
-    batch's distinct LOWERED spellings (a ``StringArray``).
+def _lowered(words):
+    """The words of a ``StringArray``, each lowered as Python
+    ``str.lower`` does (Spark's ``lower()``).
 
-    Lowering runs in Python over the raw vocabulary only. pc.utf8_lower
-    is utf8proc's SIMPLE per-codepoint mapping, while Spark's lower() is
+    ASCII words lower in Arrow (``ascii_lower`` is exact on them); only
+    the distinct non-ASCII words lower in Python. pc.utf8_lower is
+    utf8proc's SIMPLE per-codepoint mapping, while Spark's lower() is
     Java full case mapping (İ → 'i'+U+0307, final sigma, …); Python
     str.lower() matches Java on every divergent case (probed: İN, ΟΔΟΣ,
     ΣΣ, ẞ, ǅ…). Case mapping never creates or destroys whitespace, so
     split-then-lower ≡ the expression's lower-then-split, and per-token
     lowering keeps the Final_Sigma context: token boundaries are
-    whitespace (uncased) on both sides. Keying on the lowered identity
+    whitespace (uncased) on both sides."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    low = pc.ascii_lower(words)
+    other = pc.invert(pc.string_is_ascii(words))
+    if other.true_count:
+        raw = words.filter(other).dictionary_encode()
+        lowered = pa.array(
+            [w.lower() for w in raw.dictionary.to_pylist()], words.type
+        )
+        low = pc.replace_with_mask(low, other, lowered.take(raw.indices))
+    return low
+
+
+def _lowered_codes(words):
+    """``(codes, vocab)``: each word's int64 index into ``vocab``, the
+    batch's distinct :func:`_lowered` spellings (a ``StringArray``),
+    lowering the raw vocabulary only. Keying on the lowered identity
     makes distinct raw spellings of one lowered word the same word."""
     import numpy as np
-    import pyarrow as pa
 
     raw = words.dictionary_encode()
-    low = pa.array(
-        [w.lower() for w in raw.dictionary.to_pylist()], pa.string()
-    ).dictionary_encode()
+    low = _lowered(raw.dictionary).dictionary_encode()
     codes = np.asarray(low.indices, dtype=np.int64)[
         np.asarray(raw.indices, dtype=np.int64)
     ]
@@ -299,75 +295,68 @@ def _shingle_bytes(ws: list[str], n: int = _SHINGLE_N) -> list[bytes]:
     return [s.encode("utf-8") for s in sh]
 
 
+def _sha60(shingles):
+    """uint64 ``sha256(s)[:8]`` big-endian shifted right 4 bits for each
+    value of a string array, hashing each distinct value once (Arrow
+    ``dictionary_encode``) straight from slices of its data buffer."""
+    import numpy as np
+
+    d = shingles.dictionary_encode()
+    offs, data = _string_buffers(d.dictionary)
+    data, sha = data.tobytes(), hashlib.sha256
+    offs = offs.tolist()
+    dig = b"".join([sha(data[a:b]).digest()[:8] for a, b in zip(offs, offs[1:])])
+    uh = np.frombuffer(dig, dtype=">u8").astype(np.uint64) >> np.uint64(4)
+    return uh[np.asarray(d.indices, dtype=np.int64)]
+
+
 def _minhash_signatures(texts, salts, chunk_shingles: int = 1 << 21):
     """(rows × k) uint64 minhash signatures of a pyarrow string array:
     per row and salt, ``min(h(shingle) ^ salt)`` over the row's distinct
     shingles (``_shingle_bytes(_words(text))``), where ``h`` is the first
     8 bytes of sha256 big-endian shifted right 4 bits.
 
-    Columnar per chunk of rows: the words come from :func:`scan_words`
-    keyed on the lowered vocabulary (:func:`_lowered_codes`); each 3-gram
-    is a code triple, packed into one int64 key when the vocabulary
-    allows (else the triples are sorted as rows), so ``sha256`` runs
-    once per chunk-distinct shingle over the joined lowered words. Rows
-    with fewer than 3 words keep the whole-text shingle (``''`` for none).
-    Repeats of a shingle within a row need no dedup: min is idempotent.
-    The per-row min runs per salt as ``minimum.reduceat(H ^ salt)`` at
-    row starts, so no (shingles × k) matrix exists. Chunks end at row
-    boundaries once they hold ``chunk_shingles`` shingles, which bounds
-    the per-shingle arrays of a batch of mega-docs."""
+    Columnar per chunk of rows: the lowered words (:func:`scan_words`,
+    :func:`_lowered`) are joined into each row's 3-gram shingles,
+    or its whole-text shingle when it has fewer than 3 words (``''`` for
+    none), and ``sha256`` runs once per distinct shingle of the chunk
+    (Arrow ``dictionary_encode``). Repeats within a row need no dedup:
+    min is idempotent. The per-row min runs per salt as
+    ``minimum.reduceat(H ^ salt)`` at row starts, so no (shingles × k)
+    matrix exists. Chunks end at row boundaries once they hold
+    ``chunk_shingles`` shingles, which bounds the per-shingle arrays of
+    a batch of mega-docs."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     n = _SHINGLE_N
-    sha = hashlib.sha256
-    n_rows = len(texts)
     counts, words = scan_words(texts)
-    codes, vocab = _lowered_codes(words)
-    vb = [w.encode("utf-8") for w in vocab.to_pylist()]
-    u = max(len(vb), 1)
+    low = _lowered(words)
     n_sh = np.where(counts >= n, counts - (n - 1), 1)
     row_w = np.r_[0, np.cumsum(counts)]
     row_sh = np.r_[0, np.cumsum(n_sh)]
-    sig = np.empty((n_rows, len(salts)), dtype=np.uint64)
-
-    def h(shingles) -> "np.ndarray":
-        """uint64 hashes of a list of shingle bytes."""
-        dig = b"".join([sha(s).digest()[:8] for s in shingles])
-        return np.frombuffer(dig, dtype=">u8").astype(np.uint64) >> np.uint64(4)
+    sig = np.empty((len(counts), len(salts)), dtype=np.uint64)
 
     for r0, r1 in _row_steps(row_sh, chunk_shingles):
-        c = codes[row_w[r0] : row_w[r1]]
+        w = low.slice(row_w[r0], row_w[r1] - row_w[r0])
         cnt = counts[r0:r1]
         # a 3-gram starts at word i iff words i..i+2 are in i's row
         row_end = np.repeat(np.cumsum(cnt), cnt)
-        at = np.flatnonzero(np.arange(len(c)) + (n - 1) < row_end)
-        grams = [c[at + j] for j in range(n)]
-        key = _composite_key(grams, u)
-        if key is not None:
-            uniq, inv = np.unique(key, return_inverse=True)
-            parts = [(uniq // u ** (n - 1 - j)) % u for j in range(n)]
-        else:
-            rows, inv = np.unique(np.stack(grams, 1), axis=0, return_inverse=True)
-            parts = [rows[:, j] for j in range(n)]
-        # the distinct shingles' bytes: lowered words joined by " "
-        uh = h(
-            pc.binary_join_element_wise(
-                *[vocab.take(pa.array(p)) for p in parts], " "
-            ).cast(pa.binary()).to_pylist()
-        )
+        at = np.flatnonzero(np.arange(len(w)) + (n - 1) < row_end)
+        short = np.flatnonzero(cnt < n)
+        whole = pa.ListArray.from_arrays(
+            pa.array(row_w[r0 : r1 + 1] - row_w[r0], pa.int32()), w
+        ).take(pa.array(short))
         # every row has ≥ 1 shingle, so reduceat segments are non-empty
         starts = row_sh[r0:r1] - row_sh[r0]
-        short = np.flatnonzero(cnt < n)
         hs = np.empty(row_sh[r1] - row_sh[r0], dtype=np.uint64)
         tri = np.ones(len(hs), dtype=bool)
         tri[starts[short]] = False
-        hs[tri] = uh[inv.ravel()]
-        hs[starts[short]] = h([
-            b" ".join(vb[i] for i in codes[row_w[r] : row_w[r + 1]].tolist())
-            for r in (short + r0).tolist()
-        ])
+        hs[tri] = _sha60(
+            pc.binary_join_element_wise(*[w.take(pa.array(at + j)) for j in range(n)], " ")
+        )
+        hs[starts[short]] = _sha60(pc.binary_join(whole, " "))
         for j, salt in enumerate(salts):
             sig[r0:r1, j] = np.minimum.reduceat(hs ^ salt, starts)
     return sig

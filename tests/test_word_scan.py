@@ -1,13 +1,13 @@
 """Spark-free pins for the byte-level text scans in operators/text_kernels.py.
 
-``scan_words`` and ``rows_with`` read a pyarrow string array's offsets
-and UTF-8 bytes directly; every text kernel (extraction word counts, the
-Gopher gate, the embedding, the banding) takes its words from them. They
-must equal the definitions they replace: RE2 ``count_substring_regex`` /
-``split_pattern_regex`` over ``textnorm._WS_CHARS``, ``oracle.word_count``,
-``text_kernels._words`` and ``pc.match_substring``. The signature and
-mode-count helpers are pinned against plain-Python specs, including the
-paths a small vocabulary never takes.
+``scan_words`` reads a pyarrow string array's offsets and UTF-8 bytes
+directly; every text kernel (extraction word counts, the Gopher gate,
+the embedding, the banding) takes its words from it. It must equal the
+definitions it replaces: RE2 ``count_substring_regex`` /
+``split_pattern_regex`` over ``textnorm._WS_CHARS``, ``oracle.word_count``
+and ``text_kernels._words``. The lowering, signature and mode-count
+helpers are pinned against plain-Python specs, including a vocabulary
+far wider than the benchmark corpus's.
 """
 
 from __future__ import annotations
@@ -75,24 +75,14 @@ def test_scan_words_equals_re2_and_oracle(texts, lead, tail, step):
     split = pc.split_pattern_regex(pc.fill_null(arr, ""), pattern=f"[{_WS_CHARS}]+")
     flat = split.flatten()
     assert words.equals(flat.filter(pc.greater(pc.utf8_length(flat), 0)))
-    # the lowered-vocabulary codes spell exactly text_kernels._words
+    # Arrow-then-Python lowering is str.lower; the lowered-vocabulary
+    # codes spell exactly text_kernels._words
+    assert tk._lowered(words).to_pylist() == [w.lower() for w in _raw_words(texts)]
     codes, vocab = tk._lowered_codes(words)
     assert vocab.take(pa.array(codes, pa.int64())).to_pylist() == [
         w for t in texts for w in tk._words(t)
     ]
     assert none is None and only_counts.tolist() == counts.tolist()
-
-
-@settings(max_examples=100, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(texts=texts_st, lead=texts_st, step=st.sampled_from([1, 2, 5, 1 << 20]))
-def test_rows_with_equals_match_substring(texts, lead, step):
-    arr = _sliced([t and t.replace("a", "<a") for t in texts], lead, [])
-    for needle in ("\r", "\n\n", "\n\n\n", "<a", "\r\n"):
-        want = pc.fill_null(pc.match_substring(arr, needle), False).to_pylist()
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(tk, "_SCAN_BYTES", step)
-            got = tk.rows_with(arr, needle.encode())
-        assert got.tolist() == want, needle
 
 
 def test_scan_words_degenerate_rows():
@@ -102,7 +92,6 @@ def test_scan_words_degenerate_rows():
         counts, words = tk.scan_words(arr)
         assert counts.tolist() == [oracle.word_count(t) for t in texts]
         assert words.to_pylist() == _raw_words(texts)
-        assert tk.rows_with(arr, b" ").tolist() == [bool(t) and " " in t for t in texts]
 
 
 def test_scan_words_ignores_bytes_under_a_null():
@@ -117,7 +106,6 @@ def test_scan_words_ignores_bytes_under_a_null():
     counts, words = tk.scan_words(arr)
     assert counts.tolist() == [1, 0, 1]
     assert words.to_pylist() == ["ab", "xy"]
-    assert tk.rows_with(arr, b"hid").tolist() == [False, False, False]
 
 
 def test_scan_words_large_string_and_chunked():
@@ -126,6 +114,10 @@ def test_scan_words_large_string_and_chunked():
     assert tk.scan_words(big)[0].tolist() == [2, 0, 1]
     chunked = pa.chunked_array([pa.array(texts[:2]), pa.array(texts[2:])])
     assert tk.scan_words(chunked)[1].to_pylist() == ["x", "y", "z"]
+    raw = ["Ab", "İN", "ΟΔΟΣ"]
+    low = tk._lowered(pa.array(raw, pa.large_string()))
+    assert low.type == pa.large_string()
+    assert low.to_pylist() == [w.lower() for w in raw]
 
 
 # --------------------------------------------- mode counts and signatures
@@ -181,9 +173,8 @@ def test_minhash_signatures_equal_spec_short_docs(chunk):
     assert (got == _signature_spec(texts)).all()
 
 
-def test_minhash_signatures_wide_vocabulary_sorts_triples(monkeypatch):
-    """More than 2^21 distinct words: a code triple no longer packs into
-    one int64, so the batch takes the row-sort path."""
+def test_minhash_signatures_wide_vocabulary():
+    """More than 2^21 distinct words, nearly all shingles distinct."""
     n_words = (1 << 21) + 64
     words = np.char.add("w", np.arange(n_words).astype(str))
     per_doc = 512
@@ -193,12 +184,6 @@ def test_minhash_signatures_wide_vocabulary_sorts_triples(monkeypatch):
     ]
     texts[3] = texts[3].upper()  # raw spellings lower onto other words
     texts += [texts[0], "", "one", "one two"]
-    keys = []
-    pack = tk._composite_key
-    monkeypatch.setattr(
-        tk, "_composite_key", lambda cols, base: keys.append(pack(cols, base)) or keys[-1]
-    )
     got = tk._minhash_signatures(pa.array(texts, pa.string()), SALTS)
-    assert keys == [None]
     rows = sorted({*range(0, len(texts), 37), 3, *range(len(texts) - 4, len(texts))})
     assert (got[rows] == _signature_spec([texts[i] for i in rows])).all()
